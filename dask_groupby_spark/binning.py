@@ -198,9 +198,9 @@ def quantile_bins(
         # metadata row bound on the VALUES frame (parquet footers /
         # cached-relation stats) proving total rows <= rows_per_chunk
         # proves no group can exceed it — window tier, ZERO probe jobs.
-        from .two_pass import _metadata_row_bound
+        from .plans import _metadata_row_bound
 
-        bound = _metadata_row_bound(vals)
+        bound = _metadata_row_bound(vals, limit=rows_per_chunk)
         if bound is not None and bound <= rows_per_chunk:
             execution = "window"
     if execution == "auto":

@@ -11,14 +11,22 @@ array order that first/last/arg-reductions/scans depend on.
 Query lifecycle → physical plan:
 
     df.where(by not missing)                 # NaN-label exclusion, core.py:846-849
-      .groupBy(*keys).agg(expr)              # HashAggregate(partial) → Exchange
+      .groupBy(*keys).agg(finish(expr))      # HashAggregate(partial) → Exchange
                                              #   → HashAggregate(final): the
                                              # built-in equivalent of flox's
-                                             # chunk_reduce + _tree_reduce
-      → min_count mask                       # core.py:1144-1168
+                                             # chunk_reduce + _tree_reduce;
+                                             # finish = dtype restore, NA
+                                             # coalesce, min_count mask
+                                             # (xrdtypes.py:153-209,
+                                             # core.py:1144-1168)
       → reindex join onto expected_groups    # reindex_, core.py:667-712
-      → fill/NA coalesce + dtype restore     # xrdtypes.py:153-209
-      → ORDER BY keys (sort=True)            # core.py:2680-2686
+        + one select filling absent groups
+      → sort by keys (sort=True)             # core.py:2680-2686
+
+Every dtype, fill value and key expression is decided in Python from the
+input's schema, read once, so a call constructs only a handful of
+DataFrames (each construction is one JVM analysis): ``where``, ``agg``, the
+reindex join and its finishing ``select``, and the sort.
 
 ``method=``, ``engine=``, ``reindex=`` are accepted as inert hints: they
 select between numpy kernels / dask graph shapes in the reference
@@ -37,7 +45,8 @@ from . import dtypes as dt_rules
 from .aggregations import AGGREGATIONS, SCANS, Aggregation, Ctx, Scan
 from .binning import Bins
 from .dtypes import NAN
-from .reindex import expected_groups_df, observed_grid, reindex_result
+from .plans import _metadata_row_bound
+from .reindex import as_labels, expected_groups_df, observed_grid, reindex_result
 
 _PRESENT = "__present"
 _NVALID = "__nvalid"
@@ -170,34 +179,50 @@ _DT_ACCESSORS = {
 
 
 def _key_exprs(df, by, expected):
-    """Per-grouper (key_name, key_expr, key_sql_type, expected_values)."""
+    """Per-grouper ``(key_name, key_expr, key_type, expected_labels)``: the
+    unaliased key expression over ``df``'s columns, its Spark type, and the
+    expected labels as Python scalars (or ``None``) — all from ``df``'s
+    schema, read once, so no JVM analysis runs here."""
+    schema = df.schema
+    cols = set(schema.names)
     out = []
     for b, exp in zip(by, expected):
         if isinstance(exp, Bins):
             # fall back on collision, like the dt-accessor branch below —
             # a pre-existing '<b>_bin' column would otherwise duplicate
             name = f"{b}_bin"
-            while name in df.columns:
+            while name in cols:
                 name = f"__{name}"
-            expr = exp.bucket(F.col(b)).alias(name)
-            out.append((name, expr, "int", exp.expected_codes()))
-        elif b not in df.columns and "." in b:
+            out.append((name, exp.bucket(F.col(b)), T.IntegerType(), exp.expected_codes()))
+            continue
+        labels = as_labels(exp) if exp is not None else None
+        if b not in cols and "." in b:
             col, _, acc = b.rpartition(".")
-            if col not in df.columns or acc not in _DT_ACCESSORS:
+            if col not in cols or acc not in _DT_ACCESSORS:
                 raise ValueError(
                     f"unknown grouper {b!r}: not a column, and not a "
                     f"<ts_column>.<accessor> with accessor in {sorted(_DT_ACCESSORS)}"
                 )
             # xarray names the output coord after the accessor ("month");
             # fall back to ts_month on collision with an existing column
-            name = acc if acc not in df.columns else f"{col}_{acc}"
-            expr = _DT_ACCESSORS[acc](F.col(col)).alias(name)
-            sql_type = "date" if acc == "date" else "int"
-            out.append((name, expr, sql_type, list(exp) if exp is not None else None))
+            name = acc if acc not in cols else f"{col}_{acc}"
+            ktype = T.DateType() if acc == "date" else T.IntegerType()
+            out.append((name, _DT_ACCESSORS[acc](F.col(col)), ktype, labels))
         else:
-            dt = df.schema[b].dataType
-            out.append((b, F.col(b).alias(b), dt.simpleString(), list(exp) if exp is not None else None))
+            out.append((b, F.col(b), schema[b].dataType, labels))
     return out
+
+
+def _key_filter(keys) -> Column:
+    """NaN/NULL-label exclusion (ref core.py:846-849): a row whose key is
+    missing — or, for bins, out of bounds — belongs to no group."""
+    cond = None
+    for _, expr, ktype, _ in keys:
+        ok = expr.isNotNull()
+        if isinstance(ktype, (T.FloatType, T.DoubleType)):
+            ok = ok & ~F.isnan(expr)
+        cond = ok if cond is None else (cond & ok)
+    return cond
 
 
 def groupby_reduce(
@@ -245,13 +270,12 @@ def groupby_reduce(
     expected = _normalize_expected(by, expected_groups)
     keys = _key_exprs(df, by, expected)
     key_names = [k[0] for k in keys]
+    labels = [k[3] for k in keys]
+    any_expected = any(e is not None for e in labels)
 
-    # bool → int cast before arithmetic reductions (ref core.py:2442-2443)
-    work = df
-    if spec.bool_to_int and isinstance(df.schema[value].dataType, T.BooleanType):
-        work = work.withColumn(value, F.col(value).cast("long"))
-
-    ctx = _make_ctx(work, value, idx_col, kw)
+    # bool → int cast before arithmetic reductions (ref core.py:2442-2443),
+    # on the ctx expressions so no frame is rewritten
+    ctx = _make_ctx(df, value, idx_col, kw, bool_to_long=spec.bool_to_int)
     if spec.needs_idx and ctx.idx is None:
         raise ValueError(f"func={spec.name!r} requires idx_col=")
 
@@ -259,39 +283,14 @@ def groupby_reduce(
     mc = min_count
     if spec.forces_min_count:
         mc = max(mc or 0, 1)
-    if mc is None and fill_value is not None and any(e is not None for e in expected):
+    if mc is None and fill_value is not None and any_expected:
         mc = 1
-
-    # 1. NaN/NULL-label exclusion (ref core.py:846-849): drop rows whose key
-    #    is missing or (for bins) out of bounds. Evaluated map-side, pushed
-    #    into the scan where possible.
-    key_cols = [expr for (_, expr, _, _) in keys]
-    keyed = work.select(*key_cols, *[c for c in work.columns if c not in key_names])
-    cond = None
-    for name, _, _, _ in keys:
-        k = F.col(name)
-        knn = k.isNotNull()
-        if isinstance(keyed.schema[name].dataType, (T.FloatType, T.DoubleType)):
-            knn = knn & ~F.isnan(k)
-        cond = knn if cond is None else (cond & knn)
-    keyed = keyed.where(cond)
-
-    # 2. aggregate
-    result_dt = spec.result_type(ctx.dt, kw) if dtype is None else T._parse_datatype_string(dtype)
-    if spec.grouped_build == "mode":
-        grouped = _mode_plan(keyed, key_names, value, ctx, skipna=spec.skipna, out=out_name, mc_needed=mc is not None)
-    else:
-        agg_cols = [spec.build(ctx).alias(out_name)]
-        if mc is not None:
-            agg_cols.append(F.count(ctx.clean).alias(_NVALID))
-        grouped = keyed.groupBy(*key_names).agg(*agg_cols)
-    grouped = grouped.withColumn(_PRESENT, F.lit(True))
 
     # fill literal handling + integral promotion (ref core.py:707-711);
     # user fill_value wins, else the spec's final_fill_value (count→0,
     # prod→1, arg*→−1, any/all→False), else dtype-NA
+    result_dt = spec.result_type(ctx.dt, kw) if dtype is None else T._parse_datatype_string(dtype)
     effective_fill = fill_value if fill_value is not None else spec.final_fill
-    any_expected = any(e is not None for e in expected)
     # a *forced* min_count (nanmin/nanmax) can only mask all-NaN groups,
     # which cannot exist for non-float inputs → no promotion then
     # (flox promotes lazily only when the mask actually fires)
@@ -301,23 +300,46 @@ def groupby_reduce(
     )
     if fills_possible and dt_rules.needs_na_promotion(effective_fill, result_dt):
         result_dt = T.DoubleType()
-    fill_final = dt_rules.fill_lit(effective_fill, result_dt)
-    na = dt_rules.na_lit(result_dt)
+    # multi-by without full expected → dense observed grid
+    # (ref _factorize_multiple, core.py:2115-2166)
+    reindexed = any_expected or len(keys) > 1
+    fill_final = dt_rules.fill_lit(effective_fill, result_dt) if mc is not None or reindexed else None
 
-    out_col = F.col(out_name).cast(result_dt)
-    # present-group all-missing result → dtype NA (NOT fill_value; fill only
-    # applies to min_count-masked and absent expected groups, core.py:1144-1177)
-    out_col = F.coalesce(out_col, na) if dt_rules.is_float(result_dt) else out_col
-    if mc is not None:
-        out_col = F.when(F.col(_NVALID) < F.lit(mc), fill_final).otherwise(out_col)
-    grouped = grouped.withColumn(out_name, out_col)
+    def finish(agg: Column, nvalid: Optional[Column]) -> Column:
+        # present-group all-missing result → dtype NA (NOT fill_value; fill
+        # only applies to min_count-masked and absent expected groups,
+        # core.py:1144-1177)
+        out = agg.cast(result_dt)
+        if dt_rules.is_float(result_dt):
+            out = F.coalesce(out, dt_rules.na_lit(result_dt))
+        if mc is not None:
+            out = F.when(nvalid < F.lit(mc), fill_final).otherwise(out)
+        return out.alias(out_name)
 
-    # 3. reindex onto expected_groups (ref reindex_, core.py:667-712);
-    #    multi-by without full expected → dense observed grid
-    #    (ref _factorize_multiple, core.py:2115-2166)
-    exp_df = None
-    domain_size = _literal_domain_size([k[3] for k in keys])
-    expected_list = [k[3] for k in keys]
+    present = [F.lit(True).alias(_PRESENT)] if reindexed else []
+
+    # 1. NaN/NULL-label exclusion, evaluated map-side and pushed into the
+    #    scan where possible; 2. aggregate, finished in the same node
+    keyed = df.where(_key_filter(keys))
+    if spec.grouped_build == "mode":
+        picked = _mode_plan(
+            keyed.select(*[e.alias(n) for n, e, _, _ in keys],
+                         *[c for c in df.columns if c not in key_names]),
+            key_names, value, ctx, skipna=spec.skipna, out=out_name,
+            mc_needed=mc is not None,
+        )
+        grouped = picked.select(
+            *key_names,
+            finish(F.col(out_name), F.col(_NVALID) if mc is not None else None),
+            *present,
+        )
+    else:
+        grouped = keyed.groupBy(*[e.alias(n) for n, e, _, _ in keys]).agg(
+            finish(spec.build(ctx), F.count(ctx.clean) if mc is not None else None),
+            *present,
+        )
+
+    # 3. reindex onto expected_groups (ref reindex_, core.py:667-712).
     # Grid dims discovered from data are distinct-selects over the
     # aggregate — which Catalyst collapses into extra key-column scans of
     # the BASE table (one per grouper: a 2-key reduce scanned its input 3×,
@@ -326,40 +348,42 @@ def groupby_reduce(
     # sort's range-sampling pass all read the KB-class materialized rows:
     # exactly ONE input scan at any scale (guide §2.4).
     needs_observed_dims = (
-        any(e is None for e in expected_list) if any_expected else len(key_names) > 1
+        any(e is None for e in labels) if any_expected else len(keys) > 1
     )
-    if needs_observed_dims and not grouped.isStreaming:
+    if needs_observed_dims and not df.isStreaming:
         grouped = _pin_small(grouped)
     result = grouped
-    if any_expected:
-        # per-grouper: given expected domain, or observed labels when None
-        # (mixed case honored — ref core.py:2087-2107)
-        exp_df = expected_groups_df(
-            df.sparkSession,
-            key_names,
-            [k[3] for k in keys],
-            [k[2] for k in keys],
-            result=grouped,
+    if reindexed:
+        if any_expected:
+            # per-grouper: given expected domain, or observed labels when
+            # None (mixed case honored — ref core.py:2087-2107)
+            exp_df = expected_groups_df(
+                df.sparkSession, key_names, labels, [k[2] for k in keys], result=grouped
+            )
+        else:
+            exp_df = observed_grid(grouped, key_names)
+        result = reindex_result(grouped, exp_df, key_names).select(
+            *key_names,
+            F.when(F.col(_PRESENT).isNull(), fill_final)
+            .otherwise(F.col(out_name))
+            .cast(result_dt)
+            .alias(out_name),
         )
-    elif len(key_names) > 1:
-        exp_df = observed_grid(grouped, key_names)
-    if exp_df is not None:
-        result = reindex_result(grouped, exp_df, key_names)
-        result = result.withColumn(
-            out_name,
-            F.when(F.col(_PRESENT).isNull(), fill_final).otherwise(F.col(out_name)),
-        )
-    result = result.select(*key_names, F.col(out_name).cast(result_dt).alias(out_name))
 
     # 4. output-group sort (ref core.py:2680-2686; tiny result — cheap)
     if sort:
-        result = _sorted_output(result, key_names, domain_size)
+        result = _sorted_output(result, df, key_names, labels, needs_observed_dims)
     return result
 
 
-#: full client-literal expected domains up to this many rows take the
-#: single-task sort (below) instead of a range-partitioned orderBy.
-_SMALL_SORT_MAX = 65_536
+#: outputs bounded by this many rows take a single-task sort (below)
+#: instead of a range-partitioned ``orderBy``.  Measured crossover on a
+#: 4-vCPU host, worst case (every input row its own group, so the single
+#: task merges and sorts all of them): coalesce(1) beats orderBy at 65 536
+#: (0.26 s vs 0.45 s), 131 072 (0.30 vs 0.51) and 262 144 rows (0.38 vs
+#: 0.52), and loses from 524 288 (0.62 vs 0.52).  With few groups the
+#: single task wins at every size.
+_SMALL_SORT_MAX = 262_144
 
 
 def _literal_domain_size(expected) -> Optional[int]:
@@ -373,14 +397,33 @@ def _literal_domain_size(expected) -> Optional[int]:
     return size
 
 
-def _sorted_output(result: DataFrame, key_names, domain_size: Optional[int]) -> DataFrame:
-    """Output-group sort.  When the output cardinality is *known* small (full
-    client-literal expected domain), a single-task sort behind one round-robin
-    exchange beats a global ``orderBy``: range partitioning samples its child
-    plan with an extra job, which re-executes the reindex join (measured 2×
-    the whole query at sf0.1 for a 5-bin result).  Unknown or large outputs
-    keep the scalable range sort."""
-    if domain_size is not None and domain_size <= _SMALL_SORT_MAX:
+def _sorted_output(result: DataFrame, df: DataFrame, key_names, labels, grid: bool) -> DataFrame:
+    """Output-group sort, picked from what bounds the output's rows.
+
+    A global ``orderBy`` range-partitions its child: one extra sampling job
+    that re-executes the plan below it, plus a shuffle — on a |groups|-row
+    output that costs more than the aggregate.  When the output is known
+    small, a single-task sort does the same job:
+
+    - the input's metadata row bound (:func:`_metadata_row_bound`:
+      cached-relation stats or parquet footers) is ≤ ``_SMALL_SORT_MAX``,
+      and the output is the observed groups (at most the input rows) or a
+      literal domain within the cap → ``coalesce(1).sortWithinPartitions``.
+      The final aggregate's input is at most the input rows, so one task
+      is cheap, and no extra job or exchange runs;
+    - only a client-literal expected domain within the cap bounds the
+      output → ``repartition(1).sortWithinPartitions``: a ``coalesce``
+      here could pull an unbounded zero-exchange plan (a bucketed scan)
+      into one task, a round-robin exchange cannot;
+    - otherwise (a cross-product ``grid`` with observed dims, a large
+      domain, an input with no bound) → ``orderBy``, which scales."""
+    domain = _literal_domain_size(labels)
+    if grid or (domain is not None and domain > _SMALL_SORT_MAX):
+        return result.orderBy(*key_names)
+    bound = _metadata_row_bound(df, limit=_SMALL_SORT_MAX)
+    if bound is not None and bound <= _SMALL_SORT_MAX:
+        return result.coalesce(1).sortWithinPartitions(*key_names)
+    if domain is not None:
         return result.repartition(1).sortWithinPartitions(*key_names)
     return result.orderBy(*key_names)
 
@@ -1003,21 +1046,14 @@ def groupby_agg(
     expected = _normalize_expected(by, expected_groups)
     keys = _key_exprs(df, by, expected)
     key_names = [k[0] for k in keys]
-    key_cols = [expr for (_, expr, _, _) in keys]
+    labels = [k[3] for k in keys]
+    any_expected = any(e is not None for e in labels)
 
-    keyed = df.select(*key_cols, *[c for c in df.columns if c not in key_names])
-    cond = None
-    for name, _, _, _ in keys:
-        k = F.col(name)
-        ok = k.isNotNull()
-        if isinstance(keyed.schema[name].dataType, (T.FloatType, T.DoubleType)):
-            ok = ok & ~F.isnan(k)
-        cond = ok if cond is None else (cond & ok)
-    keyed = keyed.where(cond)
-
+    # each column's dtype restore + NA coalesce rides its aggregate
+    # expression; absent expected groups get the column's final_fill (or
+    # dtype NA), same semantics as groupby_reduce
     agg_cols = []
-    casts = {}
-    fills = {}
+    fills = []
     for item in funcs:
         name, vcol, out = item[0], item[1], item[2]
         kw = dict(item[3]) if len(item) > 3 else {}
@@ -1026,44 +1062,39 @@ def groupby_agg(
             raise ValueError(f"{name} cannot be fused; call groupby_reduce separately")
         # the cast rides the ctx EXPRESSIONS (r9 review: casting a
         # throwaway frame never reached the plan and boolean nansum threw)
-        ctx = _make_ctx(keyed, vcol, idx_col, kw, bool_to_long=spec.bool_to_int)
-        agg_cols.append(spec.build(ctx).alias(out))
-        casts[out] = spec.result_type(ctx.dt, kw)
-        fills[out] = spec.final_fill
-
-    result = keyed.groupBy(*key_names).agg(*agg_cols)
-    for out, dt in casts.items():
-        col = F.col(out).cast(dt)
+        ctx = _make_ctx(df, vcol, idx_col, kw, bool_to_long=spec.bool_to_int)
+        dt = spec.result_type(ctx.dt, kw)
+        col = spec.build(ctx).cast(dt)
         if dt_rules.is_float(dt):
             col = F.coalesce(col, dt_rules.na_lit(dt))
-        result = result.withColumn(out, col)
+        agg_cols.append(col.alias(out))
+        fills.append((out, dt, spec.final_fill))
 
-    # reindex onto expected_groups — absent groups get each column's
-    # final_fill (or dtype NA), same semantics as groupby_reduce
-    domain_size = _literal_domain_size([k[3] for k in keys])
-    if any(e is not None for e in expected):
-        result = result.withColumn(_PRESENT, F.lit(True))
-        # mixed literal/observed domains: same base-rescan collapse as the
-        # groupby_reduce grid (see step 3 there) — pin the aggregate so
-        # observed dims read it, not the input
-        if any(e is None for e in expected) and not result.isStreaming:
+    present = [F.lit(True).alias(_PRESENT)] if any_expected else []
+    result = df.where(_key_filter(keys)).groupBy(
+        *[e.alias(n) for n, e, _, _ in keys]
+    ).agg(*agg_cols, *present)
+
+    # mixed literal/observed domains: same base-rescan collapse as the
+    # groupby_reduce grid (see step 3 there) — pin the aggregate so
+    # observed dims read it, not the input
+    grid = any_expected and any(e is None for e in labels)
+    if any_expected:
+        if grid and not df.isStreaming:
             result = _pin_small(result)
         exp_df = expected_groups_df(
-            df.sparkSession,
-            key_names,
-            [k[3] for k in keys],
-            [k[2] for k in keys],
-            result=result,
+            df.sparkSession, key_names, labels, [k[2] for k in keys], result=result
         )
-        result = reindex_result(result, exp_df, key_names)
-        for out, dt in casts.items():
-            fv = fills[out]
-            fill = dt_rules.fill_lit(fv, dt) if fv is not None else dt_rules.na_lit(dt)
-            result = result.withColumn(
-                out,
-                F.when(F.col(_PRESENT).isNull(), fill).otherwise(F.col(out)),
-            )
-        result = result.drop(_PRESENT)
+        result = reindex_result(result, exp_df, key_names).select(
+            *key_names,
+            *[
+                F.when(
+                    F.col(_PRESENT).isNull(),
+                    dt_rules.fill_lit(fv, dt) if fv is not None else dt_rules.na_lit(dt),
+                ).otherwise(F.col(out)).alias(out)
+                for out, dt, fv in fills
+            ],
+        )
     if sort:
-        result = _sorted_output(result, key_names, domain_size)
+        result = _sorted_output(result, df, key_names, labels, grid)
     return result

@@ -282,7 +282,7 @@ def sorted_bucket_pairs(
     Spill-tier economics (r11, VERDICT r10 item #7): before engaging the
     spill machinery, a driver-only metadata row bound on ``rows``
     (parquet footers / cached-relation stats — the
-    :func:`~dask_groupby_spark.two_pass._metadata_row_bound` ladder) is
+    :func:`~dask_groupby_spark.plans._metadata_row_bound` ladder) is
     tried: a bucket can never hold more members than ``rows`` has rows,
     so ``bound <= spill_threshold`` proves no bucket can spill and the
     plain single-level plan runs with ZERO extra jobs or shuffles —
@@ -290,9 +290,9 @@ def sorted_bucket_pairs(
     an explode in the lineage) pay the pre-count probe.
     """
     if spill_threshold is not None:
-        from ..two_pass import _metadata_row_bound
+        from ..plans import _metadata_row_bound
 
-        bound = _metadata_row_bound(rows)
+        bound = _metadata_row_bound(rows, limit=spill_threshold)
         if bound is not None and bound <= spill_threshold:
             spill_threshold = None
     if spill_threshold is not None:
@@ -1063,9 +1063,9 @@ def near_deduplicate(
         # plan, zero extra jobs or shuffles, bit-identical output.
         # Corpora too large to bound this way (or non-file frames) keep
         # the default-ON guard.
-        from ..two_pass import _metadata_row_bound
+        from ..plans import _metadata_row_bound
 
-        corpus_bound = _metadata_row_bound(df)
+        corpus_bound = _metadata_row_bound(df, limit=spill_threshold)
         if corpus_bound is not None and corpus_bound <= spill_threshold:
             spill_threshold = None
     sig = minhash_signatures(
@@ -1706,9 +1706,9 @@ def edit_distance_pairs(
             #   (0.8 GB at a pathological 10⁸-degree gram) while the
             #   salted tier's per-row state is capped at every level.
             #   Output proven row-identical by exceptAll at both caps.
-            from ..two_pass import _metadata_row_bound
+            from ..plans import _metadata_row_bound
 
-            bound = _metadata_row_bound(base)
+            bound = _metadata_row_bound(base, limit=_FUZZY_SALTED_MIN_RECORDS)
             if bound is not None and bound <= _FUZZY_SALTED_MIN_RECORDS:
                 buckets = (
                     gl.groupBy("g")

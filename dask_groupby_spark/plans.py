@@ -16,9 +16,16 @@ pre-optimizers, plus plan-inspection utilities used by tests/benchmarks.
   Spark counterpart IS the blockwise layout, and this export is a documented
   alias of :func:`rechunk_for_blockwise` to keep the public API surface
   1:1 (SURVEY.md §4).
+- :func:`_metadata_row_bound`: an upper bound on a frame's rows from
+  metadata alone (cached-relation stats, parquet footers), no Spark job —
+  shared by the reduction path's output-sort rule (core.py) and the
+  auto-tier dispatch ladders (two_pass.py, binning.py, operators/dedup.py).
 """
 
 from __future__ import annotations
+
+import re
+from typing import Optional
 
 from pyspark.sql import DataFrame
 
@@ -86,6 +93,135 @@ def bucket_table(
     return df.sparkSession.table(name)
 
 
+# Logical-plan nodes that can INCREASE row count.  Anything else
+# (Project/Filter/Aggregate/Window/Sort/Deduplicate/Limit, and Sample
+# WITHOUT replacement — see :func:`_plan_can_grow_rows`) keeps or reduces
+# it, so the sum of the LEAVES' row counts under those nodes is a safe
+# UPPER bound on the frame's rows.  Substring match on the analyzed plan
+# is conservative: a false positive (e.g. a user column literally named
+# "UnionX") merely falls back to the probe job — never wrong tiers.
+_ROW_GROWING_NODES = (
+    "Join",
+    "Generate",  # explode / posexplode / inline / stack
+    "Union",
+    "Expand",  # cube / rollup / grouping sets
+    "Unpivot",  # melt: rows x value-columns
+    "FlatMapGroupsInPandas",  # applyInPandas
+    "FlatMapCoGroupsInPandas",
+    "MapInPandas",
+    "FlatMapGroupsWithState",
+    "CoGroup",
+)
+
+# Sample prints as "Sample <low>, <high>, <withReplacement>, <seed>" in the
+# analyzed plan; with replacement the output can EXCEED the child's rows
+# (fraction > 1 draws each row multiple times — ADVICE r11 #2).  Any Sample
+# line whose flag we cannot positively read as "false" is treated as
+# row-growing; false positives just fall back to the probe.
+_SAMPLE_NO_REPLACEMENT = re.compile(r"Sample [^\n]*?, false,")
+
+
+def _plan_can_grow_rows(plan: str) -> bool:
+    """True when the analyzed-plan string contains any node that can emit
+    more rows than its children received (then no leaf-sum bound is
+    safe)."""
+    if any(tok in plan for tok in _ROW_GROWING_NODES):
+        return True
+    for line in plan.splitlines():
+        if "Sample " in line and not _SAMPLE_NO_REPLACEMENT.search(line):
+            return True
+    return False
+
+
+def _parquet_footer_sum(files, max_files: int, limit: Optional[int] = None):
+    """Sum of row counts from LOCAL parquet footers, or None (non-local /
+    non-parquet / too many files — on a real cluster driver-side footer
+    reads would be remote round-trips; the probe job is the right tool
+    there).  With ``limit``, stops reading footers as soon as the running
+    sum exceeds it and returns that partial sum (> ``limit``)."""
+    if not files or len(files) > max_files:
+        return None
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    total = 0
+    for uri in files:
+        if limit is not None and total > limit:
+            return total
+        u = urlparse(uri)
+        if u.scheme not in ("file", ""):
+            return None
+        path = unquote(u.path)
+        if not path.endswith(".parquet"):
+            return None
+        try:
+            total += pq.read_metadata(path).num_rows
+        except Exception:
+            return None
+    return total
+
+
+def _leaf_row_bound(leaf, max_files: int, limit: Optional[int] = None):
+    """Upper bound for ONE optimized-plan leaf, or None.  Catalyst stats
+    first (exact for a materialized InMemoryRelation, LocalRelation,
+    Range); else the leaf's own parquet footers (a LogicalRelation over
+    HadoopFsRelation exposes its file listing driver-side)."""
+    try:
+        rc = leaf.stats().rowCount()
+        if rc.isDefined():
+            return int(str(rc.get()))
+    except Exception:
+        pass
+    try:
+        files = list(leaf.relation().location().inputFiles())
+    except Exception:
+        return None
+    return _parquet_footer_sum(files, max_files, limit)
+
+
+def _metadata_row_bound(df: DataFrame, max_files: int = 4096, limit: Optional[int] = None):
+    """Upper bound on ``df``'s row count from driver-side metadata alone —
+    parquet footers and Catalyst leaf stats, no Spark job (VERDICT r10 #1:
+    "a parquet-scan count is metadata-cheap").  Returns ``None`` when no
+    safe bound exists: any plan node that can multiply rows (including
+    Sample WITH replacement), or any leaf whose row count is unknowable
+    driver-side.
+
+    EVERY leaf of the optimized plan must yield a bound and all leaves are
+    summed (ADVICE r11 #1: summing only the file leaves under-counted
+    plans mixing a cached relation with a parquet scan, e.g.
+    ``cachedDF.exceptAll(smallParquetDF)`` — row-reducing overall, but the
+    dominant side had no files).  With no row-growing node, every
+    remaining operator emits at most the rows it receives, so the leaf sum
+    bounds the root — an over-estimate stays a valid bound.
+
+    ``limit`` is for callers that only compare the bound with a cap: the
+    walk stops as soon as the running sum exceeds ``limit`` (O(1) footer
+    reads on a large many-file table) and returns that partial sum — a
+    result > ``limit`` then only says "over the cap", not the bound."""
+    try:
+        plan = df._jdf.queryExecution().analyzed().toString()
+        if _plan_can_grow_rows(plan):
+            return None
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        n = leaves.size()
+        if n == 0:
+            return None
+        total = 0
+        for i in range(n):
+            left = None if limit is None else limit - total
+            b = _leaf_row_bound(leaves.apply(i), max_files, left)
+            if b is None:
+                return None
+            total += b
+            if limit is not None and total > limit:
+                return total
+        return total
+    except Exception:
+        return None
+
+
 def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
     """The physical plan string (for plan-shape assertions in tests);
     ``mode`` ∈ formatted|simple|extended|codegen|cost."""
@@ -96,8 +232,6 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
 
 def count_exchanges(df: DataFrame) -> int:
     """# of shuffle (Exchange) nodes in the formatted physical plan."""
-    import re
-
     return len(re.findall(r"^\(\d+\) Exchange", physical_plan(df), re.M))
 
 

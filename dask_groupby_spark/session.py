@@ -43,6 +43,14 @@ def get_spark(
         # for the per-operator contract.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # PySpark's DataFrame query context: with it on, EVERY Column
+        # function call first reads the session conf over Py4J, walks the
+        # Python stack and sets/clears a JVM call-site origin — ~10 extra
+        # round trips per ``F.col``/``F.when``/``cast``, 2-3x the cost of
+        # the expression itself.  A reduction builds dozens of Columns per
+        # call, so it is off: error messages lose the Python call site,
+        # the JVM error and plan context stay.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # driver testdata stores timestamp[ns]; Spark can't read TIMESTAMP(NANOS)
         # natively — read as BIGINT nanos, sources.load_table casts to micros

@@ -46,7 +46,6 @@ path (their frames need neighbor rows, not a prefix state).
 
 from __future__ import annotations
 
-import re
 from collections import OrderedDict
 from typing import Optional
 
@@ -55,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import dtypes as dt_rules
+from .plans import _metadata_row_bound
 
 _CHUNK = "__tp_chunk"
 _PROPAGATING = {"cumsum", "cumprod", "cummax", "cummin"}
@@ -208,124 +208,6 @@ def _chunk_stats(df: DataFrame, keys: list, idxn, count_col: str = "__tp_n") -> 
     )
 
 
-# Logical-plan nodes that can INCREASE row count.  Anything else
-# (Project/Filter/Aggregate/Window/Sort/Deduplicate/Limit, and Sample
-# WITHOUT replacement — see :func:`_plan_can_grow_rows`) keeps or reduces
-# it, so the sum of the LEAVES' row counts under those nodes is a safe
-# UPPER bound on the frame's rows.  Substring match on the analyzed plan
-# is conservative: a false positive (e.g. a user column literally named
-# "UnionX") merely falls back to the probe job — never wrong tiers.
-_ROW_GROWING_NODES = (
-    "Join",
-    "Generate",  # explode / posexplode / inline / stack
-    "Union",
-    "Expand",  # cube / rollup / grouping sets
-    "Unpivot",  # melt: rows x value-columns
-    "FlatMapGroupsInPandas",  # applyInPandas
-    "FlatMapCoGroupsInPandas",
-    "MapInPandas",
-    "FlatMapGroupsWithState",
-    "CoGroup",
-)
-
-# Sample prints as "Sample <low>, <high>, <withReplacement>, <seed>" in the
-# analyzed plan; with replacement the output can EXCEED the child's rows
-# (fraction > 1 draws each row multiple times — ADVICE r11 #2).  Any Sample
-# line whose flag we cannot positively read as "false" is treated as
-# row-growing; false positives just fall back to the probe.
-_SAMPLE_NO_REPLACEMENT = re.compile(r"Sample [^\n]*?, false,")
-
-
-def _plan_can_grow_rows(plan: str) -> bool:
-    """True when the analyzed-plan string contains any node that can emit
-    more rows than its children received (then no leaf-sum bound is
-    safe)."""
-    if any(tok in plan for tok in _ROW_GROWING_NODES):
-        return True
-    for line in plan.splitlines():
-        if "Sample " in line and not _SAMPLE_NO_REPLACEMENT.search(line):
-            return True
-    return False
-
-
-def _parquet_footer_sum(files, max_files: int):
-    """Sum of row counts from LOCAL parquet footers, or None (non-local /
-    non-parquet / too many files — on a real cluster driver-side footer
-    reads would be remote round-trips; the probe job is the right tool
-    there)."""
-    if not files or len(files) > max_files:
-        return None
-    from urllib.parse import unquote, urlparse
-
-    import pyarrow.parquet as pq
-
-    total = 0
-    for uri in files:
-        u = urlparse(uri)
-        if u.scheme not in ("file", ""):
-            return None
-        path = unquote(u.path)
-        if not path.endswith(".parquet"):
-            return None
-        try:
-            total += pq.read_metadata(path).num_rows
-        except Exception:
-            return None
-    return total
-
-
-def _leaf_row_bound(leaf, max_files: int):
-    """Upper bound for ONE optimized-plan leaf, or None.  Catalyst stats
-    first (exact for a materialized InMemoryRelation, LocalRelation,
-    Range); else the leaf's own parquet footers (a LogicalRelation over
-    HadoopFsRelation exposes its file listing driver-side)."""
-    try:
-        rc = leaf.stats().rowCount()
-        if rc.isDefined():
-            return int(str(rc.get()))
-    except Exception:
-        pass
-    try:
-        files = list(leaf.relation().location().inputFiles())
-    except Exception:
-        return None
-    return _parquet_footer_sum(files, max_files)
-
-
-def _metadata_row_bound(df: DataFrame, max_files: int = 4096):
-    """Upper bound on ``df``'s row count from driver-side metadata alone —
-    parquet footers and Catalyst leaf stats, no Spark job (VERDICT r10 #1:
-    "a parquet-scan count is metadata-cheap").  Returns ``None`` when no
-    safe bound exists: any plan node that can multiply rows (including
-    Sample WITH replacement), or any leaf whose row count is unknowable
-    driver-side.
-
-    EVERY leaf of the optimized plan must yield a bound and all leaves are
-    summed (ADVICE r11 #1: summing only the file leaves under-counted
-    plans mixing a cached relation with a parquet scan, e.g.
-    ``cachedDF.exceptAll(smallParquetDF)`` — row-reducing overall, but the
-    dominant side had no files).  With no row-growing node, every
-    remaining operator emits at most the rows it receives, so the leaf sum
-    bounds the root — an over-estimate stays a valid bound."""
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if _plan_can_grow_rows(plan):
-            return None
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        n = leaves.size()
-        if n == 0:
-            return None
-        total = 0
-        for i in range(n):
-            b = _leaf_row_bound(leaves.apply(i), max_files)
-            if b is None:
-                return None
-            total += b
-        return total
-    except Exception:
-        return None
-
-
 # Probe memo: (semanticHash, columns, keys, idx expr, file signature) ->
 # observed max-group-size from a prior probe THIS session.  Only ever used
 # to re-pick the window tier without a job — the two tiers are bit-exact
@@ -425,7 +307,7 @@ def dispatch_auto(
         if known_mx is not None and known_mx <= rows_per_chunk:
             _AUTO_MEMO.move_to_end(key)
             return "window", None
-    bound = _metadata_row_bound(df)
+    bound = _metadata_row_bound(df, limit=rows_per_chunk)
     if bound is not None and bound <= rows_per_chunk:
         return "window", None
     stats = _chunk_stats(df, keys, idxn, count_col).persist()

@@ -5,9 +5,12 @@ Mirrors the reference's empty-bin / all-NaN-block edge tests
 
 import math
 
+import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
-from dask_groupby_spark import Bins, groupby_reduce, groupby_scan
+from dask_groupby_spark import Bins, groupby_agg, groupby_reduce, groupby_scan
 
 NAN = float("nan")
 
@@ -122,3 +125,97 @@ def test_minhash_signatures_edge_semantics(spark):
                for r in minhash_signatures(union_doc).collect()}
     expect = [min(a, b) for a, b in zip(per_row[5], per_row[6])]
     assert sig[5] == expect
+
+
+def _small(spark):
+    return spark.createDataFrame(
+        [(1, 1.0, 1.0), (2, 2.0, 2.5), (3, 3.0, 4.0)], "k int, v double, x double"
+    )
+
+
+@pytest.mark.parametrize(
+    "labels",
+    [
+        np.array([1, 2, 5]),
+        np.array([1, 2, 5], dtype=np.int32),
+        pd.Index([1, 2, 5]),
+        np.arange(1, 4),
+    ],
+    ids=["np_int64", "np_int32", "pd_index", "np_arange"],
+)
+def test_expected_groups_numpy_int_labels(spark, labels):
+    """numpy arrays / pd.Index are the usual flox expected_groups idiom;
+    their numpy scalars become plain labels."""
+    out = groupby_reduce(
+        _small(spark), "k", func="nansum", value="v",
+        expected_groups=(labels,), fill_value=0.0,
+    )
+    want = {1: 1.0, 2: 2.0, 3: 3.0, 5: 0.0}
+    assert [(r["k"], r["nansum"]) for r in out.collect()] == [
+        (int(k), want[int(k)]) for k in labels
+    ]
+
+
+@pytest.mark.parametrize(
+    "labels", [np.array([1.0, 2.5, 3.0]), pd.Index([1.0, 2.5, 3.0])],
+    ids=["np_float", "pd_float_index"],
+)
+def test_expected_groups_numpy_float_labels(spark, labels):
+    out = groupby_agg(
+        _small(spark), "x", funcs=[("count", "v", "n")], expected_groups=(labels,)
+    )
+    assert [(r["x"], r["n"]) for r in out.collect()] == [(1.0, 1), (2.5, 1), (3.0, 0)]
+
+
+def _stamped(spark):
+    return spark.createDataFrame(
+        pd.DataFrame({
+            "t": pd.to_datetime(["2020-01-01", "2020-01-02", "2020-01-02"]),
+            "v": [1.0, 2.0, 3.0],
+        })
+    )
+
+
+@pytest.mark.parametrize(
+    "labels",
+    [
+        np.array(["2020-01-01", "2020-01-02", "2020-01-05"], dtype="datetime64[ns]"),
+        pd.DatetimeIndex(["2020-01-01", "2020-01-02", "2020-01-05"]),
+    ],
+    ids=["np_datetime64_ns", "pd_datetime_index"],
+)
+def test_expected_groups_datetime64_labels(spark, labels):
+    """datetime64[ns] labels (xarray's ``.values`` for a time coordinate)
+    match timestamp keys; they must not turn into int nanoseconds."""
+    out = groupby_reduce(
+        _stamped(spark), "t", func="nansum", value="v",
+        expected_groups=(labels,), fill_value=0.0,
+    ).toPandas()
+    assert out["t"].tolist() == list(pd.DatetimeIndex(labels))
+    assert out["nansum"].tolist() == [1.0, 5.0, 0.0]
+
+
+@pytest.mark.parametrize(
+    "frame, key, labels",
+    [("stamped", "t", [1, 2]), ("small", "k", ["1", "2"]), ("stamped", "v", ["a"])],
+    ids=["int_for_timestamp", "str_for_int", "str_for_double"],
+)
+def test_expected_groups_label_type_mismatch_raises(spark, frame, key, labels):
+    """Labels of the wrong kind for the key fail loudly instead of being
+    coerced into a domain no group matches."""
+    df = _stamped(spark) if frame == "stamped" else _small(spark)
+    with pytest.raises(TypeError, match="does not match the key type"):
+        groupby_reduce(df, key, func="count", value="v", expected_groups=(labels,))
+
+
+def test_expected_groups_large_unordered_domain(spark):
+    """A 65 536-label domain in no arithmetic order goes through the Arrow
+    local relation in one piece: every label comes back, absent ones
+    filled."""
+    labels = np.random.default_rng(0).permutation(65_536)
+    out = groupby_reduce(
+        _small(spark), "k", func="nansum", value="v",
+        expected_groups=(labels,), fill_value=0.0,
+    ).toPandas()
+    assert out["k"].tolist() == list(range(65_536))
+    assert out["nansum"].sum() == 6.0 and (out["nansum"] > 0).sum() == 3

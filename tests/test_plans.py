@@ -649,3 +649,124 @@ def test_target_encode_broadcast_join_back(spark):
 
     shuffles = _re.findall(r"^\(\d+\) Exchange", plan, _re.M)
     assert len(shuffles) <= 1, plan
+
+
+def test_literal_domains_plan_jvm_local(spark, li):
+    """Expected domains are JVM-local relations, never a Python-row RDD
+    (``Scan ExistingRDD`` starts a Python worker on every execution): both
+    a label list and the Bins code domain plan as a LocalTableScan."""
+    from dask_groupby_spark import Bins
+
+    strs = groupby_reduce(
+        li, "l_returnflag", func="count", value="l_quantity",
+        expected_groups=["A", "N", "R", "Z"], fill_value=0,
+    )
+    plan = physical_plan(strs)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    bins = groupby_reduce(
+        li, "l_quantity", func="count", value="l_quantity",
+        expected_groups=(Bins([0.0, 10.0, 25.0, 50.0]),), fill_value=0,
+    )
+    plan = physical_plan(bins)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert [r["count"] for r in bins.collect()] == [
+        li.where((F.col("l_quantity") > lo) & (F.col("l_quantity") <= hi)).count()
+        for lo, hi in ((0.0, 10.0), (10.0, 25.0), (25.0, 50.0))
+    ]
+
+
+def test_bounded_single_key_reduce_skips_range_sort(li):
+    """A single-key output is at most the input's rows; under the cap the
+    sort is one task behind a coalesce — no range-sampling sort, and no
+    exchange beyond the aggregate's."""
+    out = groupby_reduce(li, "l_returnflag", func="nansum", value="l_quantity")
+    plan = physical_plan(out)
+    assert "rangepartitioning" not in plan, plan
+    assert "+- Coalesce (" in plan, plan
+    assert count_exchanges(out) == 1, plan
+    keys = [r["l_returnflag"] for r in out.collect()]
+    assert keys == sorted(keys)
+
+
+def test_unbounded_input_keeps_range_sort(li):
+    """A join or an explode can grow rows, so the input has no row bound and
+    the output keeps the scalable range-partitioned orderBy."""
+    joined = li.join(li.select("l_orderkey").distinct(), "l_orderkey")
+    exploded = li.withColumn("rep", F.explode(F.array(F.lit(1), F.lit(2))))
+    for grown in (joined, exploded):
+        out = groupby_reduce(grown, "l_returnflag", func="nansum", value="l_quantity")
+        plan = physical_plan(out)
+        assert "rangepartitioning" in plan, plan
+
+
+def test_metadata_row_bound_stops_at_limit(spark, tmp_path, monkeypatch):
+    """With a ``limit``, footer reads stop once the running sum passes it:
+    a caller that only compares with a cap reads O(1) footers of a
+    many-file table, and gets the same answer as the full bound."""
+    import pyarrow.parquet as pq
+
+    from dask_groupby_spark.plans import _metadata_row_bound
+
+    p = str(tmp_path / "many.parquet")
+    spark.range(800).repartition(8).write.parquet(p)
+    df = spark.read.parquet(p)
+    reads = []
+    orig = pq.read_metadata
+
+    def counting(path, *a, **k):
+        reads.append(path)
+        return orig(path, *a, **k)
+
+    monkeypatch.setattr(pq, "read_metadata", counting)
+    assert _metadata_row_bound(df) == 800
+    assert len(reads) == 8
+    reads.clear()
+    b = _metadata_row_bound(df, limit=150)
+    assert b > 150 and len(reads) <= 2
+    reads.clear()
+    assert _metadata_row_bound(df, limit=800) == 800 and len(reads) == 8
+
+
+def _job_count(spark, df, group: str) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df.toPandas()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reduction_job_counts(spark):
+    """Per-call Spark job floor on a small cached frame, counted by the
+    status tracker: one job for the aggregate's shuffle-map stage, one for
+    the result, plus one broadcast job when reindexing onto a domain.  A
+    range-sampling sort would add two, a Python-row domain a Python worker."""
+    from dask_groupby_spark import Bins
+
+    df = spark.range(2000).selectExpr(
+        "CAST(id % 7 AS BIGINT) AS k", "CAST(id % 13 AS DOUBLE) AS v",
+        "CAST(id % 17 AS DOUBLE) / 4 AS w",
+    ).cache()
+    try:
+        df.count()
+        calls = {
+            "single_key": (groupby_reduce(df, "k", func="nansum", value="v"), 2),
+            "holistic": (groupby_reduce(df, "k", func="nanmedian", value="v"), 2),
+            "expected_groups": (
+                groupby_reduce(df, "k", func="nanmax", value="v",
+                               expected_groups=([0, 2, 5, 11],), fill_value=-1.0),
+                3,
+            ),
+            "bins": (
+                groupby_reduce(df, "w", func="nansum", value="v",
+                               expected_groups=(Bins([0.0, 1.0, 2.0, 4.0]),),
+                               fill_value=0.0),
+                3,
+            ),
+        }
+        got = {k: _job_count(spark, out, f"job_floor_{k}") for k, (out, _) in calls.items()}
+        assert got == {k: n for k, (_, n) in calls.items()}
+    finally:
+        df.unpersist()
