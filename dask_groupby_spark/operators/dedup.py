@@ -1817,16 +1817,19 @@ def gram_blocking_stats(
         surviving.select("g"), on="g", how="left_semi"
     ).select("id").distinct()
     r = base.agg(F.count(F.lit(1)).alias("records"))
-    gr = grams.agg(
-        F.count_distinct(F.col("id")).alias("__gram_recs"),
-        F.count_distinct(F.col("g")).alias("distinct_grams"),
-    )
-    dr = (
-        dftbl.where(F.col("__df") > max_gram_df).agg(
-            F.count(F.lit(1)).alias("dropped_grams")
-        )
-        if max_gram_df is not None
-        else dftbl.agg(F.lit(0).cast("long").alias("dropped_grams"))
+    # ONE distinct aggregate over the gram stream: the gram count comes from
+    # the df table, already grouped by gram.  Two count_distincts in one
+    # aggregate expand every gram row per distinct column, in an order
+    # Spark derives from per-call expression ids, so the plan's generated
+    # classes differed (and recompiled) from call to call.
+    gr = grams.agg(F.count_distinct(F.col("id")).alias("__gram_recs"))
+    dr = dftbl.agg(
+        F.count(F.col("g")).alias("distinct_grams"),
+        (
+            F.count(F.when(F.col("__df") > max_gram_df, 1))
+            if max_gram_df is not None
+            else F.lit(0).cast("long")
+        ).alias("dropped_grams"),
     )
     bl = blocked.agg(F.count(F.lit(1)).alias("blocked_records"))
     return (

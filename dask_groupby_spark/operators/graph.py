@@ -150,10 +150,11 @@ def pagerank(
     d = float(damping)
     # dangling-mass jobs are per-ITERATION — skip them all when the graph
     # has no dangling node at all (one cheap existence probe on the
-    # checkpointed node table; common after edge cleanup)
-    has_dangling = (
-        base.where(F.col("__deg") == 0).limit(1).count() > 0
-    )
+    # checkpointed node table; common after edge cleanup).  isEmpty, not
+    # limit(1).count(): a codegen'd limit names its counter from a
+    # JVM-global sequence, so that probe compiled new classes on every
+    # call, and it ran one job more.
+    has_dangling = not base.where(F.col("__deg") == 0).isEmpty()
     ranks = base.select("id", "__deg", "__t", F.col("__t").alias("rank"))
     for _ in range(iters):
         # mass parked on dangling nodes, redistributed over the teleport

@@ -465,8 +465,11 @@ def _score_candidates(
     keys with no not-null inference — but the r12-committed after-plan
     was stale (it still showed the old shape), and the compound key
     hashes two expressions per row.  r13 settles it upstream: every
-    caller builds ``cell`` as a NON-NULLABLE column (``coalesce(expr,
-    lit(0))`` — the expr is never null, so values are unchanged), a
+    caller builds ``cell`` as a NON-NULLABLE column on both sides (the
+    corpus side as ``coalesce(expr, lit(0))`` — the expr is never null,
+    so values are unchanged; the query side's explode of a non-null
+    array is non-nullable already; asserted in
+    tests/test_operators.py), a
     non-nullable key generates no IsNotNull constraint at all, and the
     join is a single-key plain equality (plan-verified:
     plans/r13/ann_ivf_{before,after}.txt)."""
@@ -570,7 +573,14 @@ def ivf_index_topk(
     )
     # the probed-cell set is bounded by n_cells — a planner-side collect
     cells = sorted({r["cell"] for r in q.select("cell").distinct().collect()})
-    idx = spark.read.parquet(f"{path}/vectors").where(F.col("cell").isin(cells))
+    # the pruning filter reads the partition column as stored (nullable,
+    # like every parquet column); the join key is its non-nullable
+    # coalesce, as _score_candidates requires of every caller
+    idx = (
+        spark.read.parquet(f"{path}/vectors")
+        .where(F.col("cell").isin(cells))
+        .withColumn("cell", F.coalesce(F.col("cell"), F.lit(0)))
+    )
     return _score_candidates(idx, q, k, exclude_self)
 
 

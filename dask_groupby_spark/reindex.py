@@ -110,7 +110,10 @@ def expected_groups_df(
             dims.append(result.select(name).distinct())
         else:
             dims.append(_literal_domain(spark, name, vals, ktype))
-    return reduce(lambda a, b: a.crossJoin(b), dims)
+    # the hint fixes the build side: left to AQE, it broadcast whichever
+    # side finished first, so the join code (and compiled class) changed
+    # from call to call
+    return reduce(lambda a, b: a.crossJoin(b.hint("broadcast")), dims)
 
 
 def observed_grid(result: DataFrame, key_names: Sequence[str]) -> DataFrame:
@@ -128,7 +131,8 @@ def observed_grid(result: DataFrame, key_names: Sequence[str]) -> DataFrame:
     distinct stay bounded at any cardinality, so we keep them.
     """
     dims = [result.select(k).distinct() for k in key_names]
-    return reduce(lambda a, b: a.crossJoin(b), dims)
+    # build side fixed as in expected_groups_df
+    return reduce(lambda a, b: a.crossJoin(b.hint("broadcast")), dims)
 
 
 def reindex_result(

@@ -51,6 +51,23 @@ def get_spark(
         # call, so it is off: error messages lose the Python call site,
         # the JVM error and plan context stay.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Whole-stage codegen class cache, sized to the library's working
+        # set so each plan shape compiles once per JVM.  Spark's default of
+        # 100 entries is an LRU smaller than one mixed round of calls: a
+        # perfbench `interactive` round compiles ~200 classes and one pass
+        # of the 196-key driver contract ~2 300, so at 100 every repeated
+        # call recompiled (Janino) and ran as cold, un-JIT-ed bytecode.
+        # 4096 is about 2x the whole surface (docs/SCALE.md has the
+        # measurements).  Static conf: CodeGenerator reads it once per
+        # JVM, so it only takes effect when this call creates the JVM's
+        # first session.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # The cache key is the generated source, and by default the class
+        # name carries the codegen stage id.  AQE numbers stages in the
+        # order their inputs finish, so a plan with several independent
+        # stages (e.g. crossJoined aggregates) got new ids, hence new
+        # classes, on some repeats.  The id stays in the plan's `*(n)`.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # driver testdata stores timestamp[ns]; Spark can't read TIMESTAMP(NANOS)
         # natively — read as BIGINT nanos, sources.load_table casts to micros
@@ -65,3 +82,11 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compile_count(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far (cache misses of the
+    codegen class cache).  Take the difference around a call to see how
+    many classes it compiled; 0 on a repeat means every plan shape hit."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

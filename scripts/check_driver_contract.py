@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
-from dask_groupby_spark.session import get_spark
+from dask_groupby_spark.session import codegen_compile_count, get_spark
 from dask_groupby_spark.sources import TABLES
 
 
@@ -94,6 +94,13 @@ def duck_iter(cur, batch=65536):
         yield from chunk
 
 
+def cost(spark, t0, c0):
+    """Wall time since ``t0`` and the classes compiled since the compile
+    count was ``c0`` (codegen cache misses; 0 when every plan shape was
+    already compiled in this JVM).  Informational only."""
+    return f"{time.time() - t0:.1f}s, {codegen_compile_count(spark) - c0} compiled"
+
+
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -131,6 +138,7 @@ def main():
             continue
         checked += 1
         t0 = time.time()
+        c0 = codegen_compile_count(spark)
         try:
             sdf = fn(spark, sf)
             scols = sdf.columns
@@ -149,11 +157,11 @@ def main():
                 srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             failures.append((name, f"SPARK ERROR: {type(e).__name__}: {str(e)[:300]}"))
-            print(f"FAIL {name}: spark error {str(e)[:200]}")
+            print(f"FAIL {name}: spark error {str(e)[:200]} ({cost(spark, t0, c0)})")
             continue
         if name not in oracles:
             n = sdig[0] if sdig else len(srows)
-            print(f"ok?  {name}: rows-only ({n} rows, {time.time()-t0:.1f}s) [no oracle]")
+            print(f"ok?  {name}: rows-only ({n} rows, {cost(spark, t0, c0)}) [no oracle]")
             continue
         try:
             ores = con.execute(oracles[name])
@@ -170,42 +178,45 @@ def main():
                     failures.append(
                         (name, f"ROWS: spark={len(srows)} duckdb>{len(srows)}")
                     )
-                    print(f"FAIL {name}: oracle returns more rows than spark ({len(srows)})")
+                    print(
+                        f"FAIL {name}: oracle returns more rows than spark "
+                        f"({len(srows)}) ({cost(spark, t0, c0)})"
+                    )
                     continue
         except Exception as e:
             failures.append((name, f"DUCKDB ERROR: {type(e).__name__}: {str(e)[:300]}"))
-            print(f"FAIL {name}: duckdb error {str(e)[:200]}")
+            print(f"FAIL {name}: duckdb error {str(e)[:200]} ({cost(spark, t0, c0)})")
             continue
         if sorted(scols) != sorted(ocols):
             failures.append((name, f"COLUMNS: spark={sorted(scols)} duckdb={sorted(ocols)}"))
-            print(f"FAIL {name}: column mismatch {sorted(scols)} vs {sorted(ocols)}")
+            print(f"FAIL {name}: column mismatch {sorted(scols)} vs {sorted(ocols)} ({cost(spark, t0, c0)})")
             continue
         if sdig is not None:
             sn, sd = sdig
             if sn != on:
                 failures.append((name, f"ROWS: spark={sn} duckdb={on}"))
-                print(f"FAIL {name}: row count {sn} vs {on}")
+                print(f"FAIL {name}: row count {sn} vs {on} ({cost(spark, t0, c0)})")
                 continue
             if sd != od:
                 failures.append((name, f"VALUES(digest): {sn}-row digests differ"))
-                print(f"FAIL {name}: streaming digests differ over {sn} rows")
+                print(f"FAIL {name}: streaming digests differ over {sn} rows ({cost(spark, t0, c0)})")
                 continue
-            print(f"PASS {name} ({sn} rows, digest, {time.time()-t0:.1f}s)")
+            print(f"PASS {name} ({sn} rows, digest, {cost(spark, t0, c0)})")
             continue
         _, snorm = normalize(scols, srows)
         _, onorm = normalize(ocols, orows)
         if len(snorm) != len(onorm):
             failures.append((name, f"ROWS: spark={len(snorm)} duckdb={len(onorm)}"))
-            print(f"FAIL {name}: row count {len(snorm)} vs {len(onorm)}")
+            print(f"FAIL {name}: row count {len(snorm)} vs {len(onorm)} ({cost(spark, t0, c0)})")
             continue
         bad = [(a, b) for a, b in zip(snorm, onorm) if a != b]
         if bad:
             failures.append((name, f"VALUES: {len(bad)}/{len(snorm)} differ; first: {bad[0]}"))
-            print(f"FAIL {name}: {len(bad)}/{len(snorm)} rows differ")
+            print(f"FAIL {name}: {len(bad)}/{len(snorm)} rows differ ({cost(spark, t0, c0)})")
             print("   spark :", bad[0][0])
             print("   duckdb:", bad[0][1])
             continue
-        print(f"PASS {name} ({len(snorm)} rows, {time.time()-t0:.1f}s)")
+        print(f"PASS {name} ({len(snorm)} rows, {cost(spark, t0, c0)})")
 
     skipped = len(qs) - checked
     suffix = f" ({skipped} skipped by filter)" if skipped else ""

@@ -85,6 +85,20 @@ def build_queries(spark):
             emb, emb.where(F.col("vec_id") < 50), k=10, n_cells=16, nprobe=3
         )
 
+    def ann_ivf_index():
+        import tempfile
+
+        from dask_groupby_spark.operators.similarity import (
+            ivf_index_topk,
+            ivf_index_write,
+        )
+
+        path = tempfile.mkdtemp(prefix="ivf_index_")
+        ivf_index_write(emb, path, n_cells=16)
+        return ivf_index_topk(
+            spark, path, emb.where(F.col("vec_id") < 50), k=10, nprobe=3
+        )
+
     def ann_topk():
         from dask_groupby_spark.operators.similarity import cosine_topk_blas
 
@@ -155,6 +169,7 @@ def build_queries(spark):
         "near_dedup_edges": near_dedup_edges,
         "text_pipeline": text_pipeline,
         "ann_ivf": ann_ivf,
+        "ann_ivf_index": ann_ivf_index,
         "ann_lsh": ann_lsh,
         "ann_topk": ann_topk,
         "ngram_counts": ngram_counts,

@@ -733,6 +733,38 @@ def test_ivf_index_persist_matches_inline(spark, tmp_path_factory):
     assert "PartitionFilters: [cell" in plan.replace("PartitionFilters: [ cell", "PartitionFilters: [cell") or "cell#" in plan.split("PartitionFilters")[1][:200]
 
 
+def test_ivf_join_keys_non_nullable(spark, tmp_path_factory, monkeypatch):
+    """Both IVF callers hand _score_candidates a NON-NULLABLE ``cell`` on
+    both join sides (its docstring's invariant): a nullable key would make
+    Catalyst infer an IsNotNull filter on the join.  The persisted index's
+    corpus side reads ``cell`` as a parquet partition column, which is
+    nullable as stored."""
+    import numpy as np
+
+    from dask_groupby_spark.operators import similarity as sim
+
+    seen = []
+    score = sim._score_candidates
+
+    def spy(c, q, k, exclude_self=True):
+        seen.append((c.schema["cell"].nullable, q.schema["cell"].nullable))
+        return score(c, q, k, exclude_self)
+
+    monkeypatch.setattr(sim, "_score_candidates", spy)
+    rng = np.random.default_rng(7)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(60)],
+        "vec_id bigint, embedding array<float>",
+    )
+    queries = corpus.where("vec_id < 4")
+    sim.ivf_topk(corpus, queries, k=3, n_cells=4, nprobe=2)
+    path = str(tmp_path_factory.mktemp("ivfnull"))
+    sim.ivf_index_write(corpus, path, n_cells=4)
+    sim.ivf_index_topk(spark, path, queries, k=3, nprobe=2)
+    # (corpus side, query side) for ivf_topk, then ivf_index_topk
+    assert seen == [(False, False), (False, False)]
+
+
 def test_semantic_deduplicate(spark):
     """SemDeDup composition: near-identical embedding groups collapse to the
     minimum id; distant vectors survive."""

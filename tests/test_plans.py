@@ -770,3 +770,49 @@ def test_reduction_job_counts(spark):
         assert got == {k: n for k, (_, n) in calls.items()}
     finally:
         df.unpersist()
+
+
+def test_repeated_calls_compile_nothing(spark):
+    """Each plan shape compiles once per session: a mix of calls whose
+    generated classes outnumber Spark's default 100-entry codegen cache
+    compiles nothing when repeated.  With the default LRU every repeat
+    recompiled and ran as cold bytecode (``get_spark`` sizes the cache).
+    Multi-key grids are in the mix: their cross join has a fixed build
+    side, so its code does not depend on which input finished first."""
+    from dask_groupby_spark import Bins, groupby_agg, groupby_rolling, groupby_scan, xarray_reduce
+    from dask_groupby_spark.session import codegen_compile_count
+
+    # key and value types no other test reduces over, so the first pass
+    # compiles the mix's classes rather than hitting earlier tests' ones
+    df = spark.range(3000).selectExpr(
+        "id AS idx", "CAST(id % 7 AS SMALLINT) AS k", "CAST(id % 5 AS SMALLINT) AS j",
+        "CAST(id % 13 AS FLOAT) AS v", "CAST(id % 17 AS FLOAT) / 4 AS w",
+    )
+    reduce_args = [
+        ("k", "nansum", "v", {}), ("j", "nanmean", "v", {}), ("k", "nanmin", "w", {}),
+        ("k", "nanvar", "w", {}), ("j", "count", "w", {}), ("j", "nanmedian", "v", {}),
+        ("j", "nanquantile", "w", {"finalize_kwargs": {"q": 0.9}}),
+        ("k", "nanargmax", "v", {"idx_col": "idx"}), ("j", "nanargmin", "w", {"idx_col": "idx"}),
+        ("k", "first", "v", {"idx_col": "idx"}), ("j", "last", "w", {"idx_col": "idx"}),
+        ("k", "nanmax", "v", {"expected_groups": ([0, 2, 5, 11],), "fill_value": -1.0}),
+        ("w", "nansum", "v", {"expected_groups": (Bins([0.0, 1.0, 2.0, 4.0]),), "fill_value": 0.0}),
+    ]
+    mix = [
+        *(lambda a=a: groupby_reduce(df, a[0], func=a[1], value=a[2], **a[3]) for a in reduce_args),
+        lambda: groupby_reduce(df, "k", "j", func="nanmean", value="v"),
+        lambda: xarray_reduce(df, "k", func="nanmean", dims=("idx", "j"), dim="idx", value="w"),
+        lambda: groupby_agg(df, "k", funcs=[("nansum", "v", "s"), ("nanstd", "w", "sd")]),
+        lambda: groupby_scan(df, "j", func="nancumsum", value="v", idx_col="idx"),
+        lambda: groupby_scan(df, "k", func="ffill", value="w", idx_col="idx"),
+        lambda: groupby_rolling(df, "k", funcs="mean", value="v", idx_col="idx", window=5),
+    ]
+
+    def compiled_by_pass():
+        before = codegen_compile_count(spark)
+        for call in mix:
+            call().toPandas()
+        return codegen_compile_count(spark) - before
+
+    first = compiled_by_pass()
+    assert first > 100, f"mix compiles only {first} classes: too few to overflow the default cache"
+    assert [compiled_by_pass() for _ in range(3)] == [0, 0, 0]
