@@ -12,8 +12,10 @@ buckets filled).
 
 Physical plan: the bucket expression is a map-side column (no join, no
 extra stage); the reduction is the standard single-shuffle hash aggregate.
-Dense reindexing joins against a planner-generated ``sequence()`` range —
-|buckets| rows, broadcast.
+The dense bucket axis is one more key domain of the grid the reduction
+already builds (:func:`~dask_groupby_spark.reindex.dense_grid`):
+``sequence(min(bucket), max(bucket), step)`` over the aggregate, merged in
+the same single-task pass — no join, no second grid.
 
 Calendar frequencies (month/quarter/year) don't have a fixed second width;
 those use date_trunc instead of arithmetic flooring.
@@ -27,7 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import dtypes as dt_rules
-from .core import groupby_reduce
+from .core import _reduce_groups, groupby_reduce
+from .reindex import dense_grid
 
 # fixed-width frequencies in seconds
 _FIXED = {
@@ -78,19 +81,13 @@ def resample(
     ``extra_by`` keys.  Returns ``(<label> timestamp, *extra_by, <func>)``.
 
     ``dense=True`` emits every grid step between the observed min and max
-    bucket (empty buckets get ``fill_value`` — the resampling-with-missing-
-    groups case, ref flox/tests/test_xarray.py:694).  With ``extra_by``,
-    the dense axis is the FULL cross grid: every (bucket, observed key
-    combination), missing cells filled — matching reindexing onto
-    ``expected_groups`` = (grid, observed keys).
-
-    Note: ``dense=True`` lazily PERSISTS the aggregated table (it feeds
-    the grid bounds, the key domain, and the outer join — three consumers
-    AQE will not share an Exchange across; construction runs no job).
-    The returned frame exposes the cache as ``.resample_agg`` — call
-    ``out.resample_agg.unpersist()`` when done, and read the attribute
-    BEFORE transforming the result (a transformed DataFrame is a new
-    object; the attribute does not propagate).
+    bucket (the resampling-with-missing-groups case, ref
+    flox/tests/test_xarray.py:694).  With ``extra_by``, the dense axis is
+    the FULL cross grid: every (bucket, observed key combination).  An
+    absent cell gets ``fill_value``, else the func's own fill (0 for
+    ``count``), else dtype-NA, as a missing cell of a multi-key
+    :func:`~dask_groupby_spark.core.groupby_reduce` does.  The output is
+    sorted by (bucket, *extra_by) and holds no persisted state.
     """
     width, calendar = _parse_every(every)
     if width is not None and width <= 0:
@@ -113,59 +110,24 @@ def resample(
 
     # forward fill_value: with extra_by the reduction itself emits the
     # observed cross grid (flox multi-by semantics) and fills missing cells
-    # there — the dense join below only adds fully-empty buckets
     if fill_value is not None:
         kwargs.setdefault("fill_value", fill_value)
-    out = groupby_reduce(work, label, *extra_by, func=func, value=value, **kwargs)
+    if not dense:
+        return groupby_reduce(work, label, *extra_by, func=func, value=value, **kwargs)
 
-    if dense:
-        if calendar:
-            step = f"interval 1 {calendar}"
-        else:
-            # make_dt_interval keeps fractional-second widths exact — an
-            # int() truncation here would build a grid the real buckets
-            # don't land on, and the grid-preserving join would then drop
-            # every aggregated bucket (r9 review)
-            step = f"make_dt_interval(0, 0, 0, {float(width)!r})"
-        # the aggregate feeds THREE consumers below (grid bounds, the key
-        # domain, the outer join) and AQE never reuses an Exchange across
-        # consumers — persist it (lazy: construction runs no job, a tested
-        # property; an eager localCheckpoint was tried for r9's leak
-        # advice and reverted — it broke laziness and hid the lineage).
-        # The unpersist handle is exposed AND documented as
-        # ``.resample_agg``; reading it before transforming the result is
-        # the caller's contract.
-        out = out.persist()
-        # lazy grid: bounds from the AGGREGATED table — it has one row per
-        # observed bucket, so min/max(label) match the fact table's and the
-        # grid costs a 1-row aggregate over the cache, not a third fact scan
-        grid = out.select(F.min(label).alias("__lo"), F.max(label).alias("__hi")).select(
-            F.explode(
-                F.sequence(F.col("__lo"), F.col("__hi"), F.expr(step))
-            ).alias(label)
-        )
-        out_name = kwargs.get("alias") or func
-        if extra_by:
-            # full dense cross grid: bucket axis × observed key domain.
-            # Both sides are aggregate-small (|buckets| and |distinct keys|)
-            # so the cross join never touches fact-table rows; AQE picks the
-            # broadcast side from runtime sizes (no forced hint — either
-            # side can be the big one).
-            keys = out.select(*extra_by).distinct()
-            grid = grid.crossJoin(keys)
-        # RIGHT OUTER preserving the grid, strategy left to AQE: an outer
-        # join cannot broadcast its preserved side, so the only forceable
-        # broadcast would be the aggregated result — |buckets × keys| rows,
-        # a driver hazard at scale (same reasoning as reindex_result).
-        joined = out.join(grid, on=[label, *extra_by], how="right_outer")
-        res_dt = joined.schema[out_name].dataType
-        fill = (
-            dt_rules.fill_lit(fill_value, res_dt)
-            if fill_value is not None
-            else dt_rules.na_lit(res_dt)  # empty cell → dtype NA
-        )
-        agg = out
-        out = joined.withColumn(out_name, F.coalesce(F.col(out_name), fill))
-        out = out.orderBy(label, *extra_by)
-        out.resample_agg = agg
-    return out
+    if calendar:
+        step = f"interval 1 {calendar}"
+    else:
+        # make_dt_interval keeps fractional-second widths exact — an int()
+        # truncation here would build a grid the real buckets don't land on
+        step = f"make_dt_interval(0, 0, 0, {float(width)!r})"
+    kwargs.pop("sort", None)  # the grid comes out sorted
+    grouped, keys, out_name, fill = _reduce_groups(
+        work, (label, *extra_by), func=func, value=value, **kwargs
+    )
+    # the bucket axis spans the observed buckets: the aggregate has one row
+    # per observed (bucket, keys) group, so its min/max are the input's
+    span = F.sequence(F.min(label), F.max(label), F.expr(step))
+    return dense_grid(
+        grouped, [(label, span), *[(k[0], k[3]) for k in keys[1:]]], {out_name: fill}
+    )

@@ -163,6 +163,25 @@ def build_queries(spark):
 
         return tfidf_top_terms(docs, k=3)
 
+    def grid_2key():
+        """2-key observed grid: the dense (returnflag x linestatus) output."""
+        from dask_groupby_spark import groupby_reduce
+
+        return groupby_reduce(
+            li, "l_returnflag", "l_linestatus", func="nanmean", value="l_quantity"
+        )
+
+    def resample_dense_keys():
+        """resample(dense=True) crossed with an extra key: every (day,
+        event_type) cell between the first and last observed day."""
+        from dask_groupby_spark.resample import resample
+
+        ev = load_table(spark, SF_DIR, "events")
+        return resample(
+            ev, "ts", "1 day", "nansum", "value", "event_type",
+            dense=True, fill_value=0.0,
+        )
+
     return {
         "dedup_minhash": dedup_minhash,
         "near_dedup": near_dedup,
@@ -177,6 +196,8 @@ def build_queries(spark):
         "dsir": dsir,
         "quantile": quantile,
         "tfidf": tfidf,
+        "grid_2key": grid_2key,
+        "resample_dense_keys": resample_dense_keys,
     }
 
 

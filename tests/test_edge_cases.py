@@ -219,3 +219,134 @@ def test_expected_groups_large_unordered_domain(spark):
     ).toPandas()
     assert out["k"].tolist() == list(range(65_536))
     assert out["nansum"].sum() == 6.0 and (out["nansum"] > 0).sum() == 3
+
+
+# ---------------------------------------------------------------- dense grids
+# Oracle: pandas' grouped result reindexed onto the product of the key
+# domains (observed labels, sorted, unless a literal domain is given).
+
+
+def _grid_oracle(pdf, keys, agg, domains=None, fill_value=np.nan, **kw):
+    got = pdf.groupby(keys)["v"].agg(agg, **kw)
+    domains = domains or [None] * len(keys)
+    levels = [
+        sorted(pdf[k].dropna().unique()) if d is None else d
+        for k, d in zip(keys, domains)
+    ]
+    full = pd.MultiIndex.from_product(levels, names=keys)
+    return got.reindex(full, fill_value=fill_value).reset_index()
+
+
+def _assert_grid(out, exp, value):
+    got = out.toPandas()
+    assert list(got.columns) == list(exp.columns[:-1]) + [value]
+    keys = list(exp.columns[:-1])
+    # same cells in the same (sorted) order
+    pd.testing.assert_frame_equal(
+        got[keys].reset_index(drop=True), exp[keys].reset_index(drop=True),
+        check_dtype=False,
+    )
+    np.testing.assert_allclose(
+        got[value].to_numpy(dtype=float), exp.iloc[:, -1].to_numpy(dtype=float),
+        equal_nan=True,
+    )
+    return got
+
+
+def test_grid_sparse_far_more_cells_than_rows(spark):
+    """1 000 rows over 400 x 400 observed labels: 160 000 cells, 1 000 of
+    them present; every present value lands on its own cell."""
+    n = 1000
+    pdf = pd.DataFrame({
+        "a": np.arange(n) % 400,
+        "b": (np.arange(n) * 7 + np.arange(n) // 400) % 400,
+        "v": np.arange(n, dtype=float),
+    })
+    out = groupby_reduce(spark.createDataFrame(pdf), "a", "b", func="nansum", value="v")
+    got = _assert_grid(out, _grid_oracle(pdf, ["a", "b"], "sum"), "nansum")
+    assert len(got) == 400 * 400 and got["nansum"].notna().sum() == n
+
+
+def test_grid_mixed_drops_entries_outside_literal_domain(spark):
+    """Observed groups with a = 2 sit between the literal cells a = 1 and
+    a = 3 in key order; they must drop, never fill a neighbouring cell.
+    The cells (1, 2) and (3, 0) are absent next to present groups."""
+    rows = [(1, 0, 1.0), (1, 1, 2.0), (2, 0, 5.0), (2, 1, 6.0), (2, 2, 7.0),
+            (3, 1, 3.0), (3, 2, 4.0), (4, 0, 9.0)]
+    pdf = pd.DataFrame(rows, columns=["a", "b", "v"])
+    df = spark.createDataFrame(pdf)
+    exp = _grid_oracle(pdf, ["a", "b"], "sum", domains=[[1, 3], None], fill_value=-1.0)
+    out = groupby_reduce(df, "a", "b", func="nansum", value="v",
+                         expected_groups=([1, 3], None), fill_value=-1.0)
+    _assert_grid(out, exp, "nansum")
+    agg = groupby_agg(df, "a", "b", funcs=[("nansum", "v", "s")],
+                      expected_groups=([3, 1], None))
+    _assert_grid(agg, _grid_oracle(pdf, ["a", "b"], "sum", domains=[[1, 3], None]), "s")
+
+
+def test_grid_present_all_nan_group_vs_absent_cell(spark):
+    """A present group whose values are all missing keeps the dtype NA; an
+    absent cell takes fill_value.  With integral values, min_count promotes
+    the result to float and masks the short groups with NaN."""
+    rows = [(0, 0, NAN), (0, 0, NAN), (0, 1, 2.0), (1, 0, 3.0), (1, 0, 4.0)]
+    pdf = pd.DataFrame(rows, columns=["a", "b", "v"])
+    out = groupby_reduce(spark.createDataFrame(pdf), "a", "b", func="nanmean",
+                         value="v", fill_value=-1.0)
+    got = _assert_grid(out, _grid_oracle(pdf, ["a", "b"], "mean", fill_value=-1.0), "nanmean")
+    assert math.isnan(got["nanmean"][0]) and got["nanmean"][3] == -1.0
+
+    ints = spark.createDataFrame(
+        [(0, 0, None), (0, 1, 2), (1, 0, 3), (1, 0, 4)], "a int, b int, v bigint"
+    )
+    ipdf = pd.DataFrame({"a": [0, 0, 1, 1], "b": [0, 1, 0, 0], "v": [np.nan, 2, 3, 4]})
+    out = groupby_reduce(ints, "a", "b", func="nansum", value="v", min_count=2)
+    assert dict(out.dtypes)["nansum"] == "double"
+    _assert_grid(out, _grid_oracle(ipdf, ["a", "b"], "sum", min_count=2), "nansum")
+
+
+def test_grid_string_keys(spark):
+    rows = [("x", "p", 1.0), ("x", "q", 2.0), ("y", "q", 3.0), ("z", "p", 4.0),
+            ("z", "r", 5.0)]
+    pdf = pd.DataFrame(rows, columns=["a", "b", "v"])
+    out = groupby_reduce(spark.createDataFrame(pdf), "a", "b", func="count", value="v")
+    _assert_grid(out, _grid_oracle(pdf, ["a", "b"], "count", fill_value=0), "count")
+
+
+def test_grid_empty_input(spark):
+    df = spark.createDataFrame([], "a int, b string, v double")
+    for out in (
+        groupby_reduce(df, "a", "b", func="nansum", value="v"),
+        groupby_reduce(df, "a", "b", func="nansum", value="v",
+                       expected_groups=([1, 2], None), fill_value=0.0),
+    ):
+        assert out.columns == ["a", "b", "nansum"]
+        assert out.collect() == []
+
+
+def test_grid_nan_fill_on_integral_result(spark):
+    """A NaN fill_value on an integral grid promotes the absent cells to a
+    double NaN (flox promotes likewise); a cast back to the integral type
+    cannot hold NaN."""
+    rows = [(0, 0, 1.0), (0, 1, 2.0), (1, 0, 3.0)]
+    pdf = pd.DataFrame(rows, columns=["a", "b", "v"])
+    out = groupby_reduce(spark.createDataFrame(pdf), "a", "b", func="count",
+                         value="v", fill_value=NAN)
+    assert dict(out.dtypes)["count"] == "double"
+    _assert_grid(out, _grid_oracle(pdf, ["a", "b"], "count"), "count")
+
+
+def test_resample_dense_empty_bucket_takes_func_fill(spark):
+    """An empty bucket of a dense resample is an absent grid cell: count
+    reads 0 there, like an absent (bucket, key) cell, and the bucket axis
+    spans the first to the last observed bucket."""
+    import datetime as dt
+
+    from dask_groupby_spark.resample import resample
+
+    df = spark.createDataFrame(
+        [(dt.datetime(2024, 1, 1, 1), 1.0), (dt.datetime(2024, 1, 3, 1), NAN)],
+        "ts timestamp, v double",
+    )
+    got = [(r["bucket"].day, r["count"]) for r in
+           resample(df, "ts", "1 day", "count", "v", dense=True).collect()]
+    assert got == [(1, 1), (2, 0), (3, 0)]

@@ -741,35 +741,107 @@ def _job_count(spark, df, group: str) -> int:
 def test_reduction_job_counts(spark):
     """Per-call Spark job floor on a small cached frame, counted by the
     status tracker: one job for the aggregate's shuffle-map stage, one for
-    the result, plus one broadcast job when reindexing onto a domain.  A
-    range-sampling sort would add two, a Python-row domain a Python worker."""
-    from dask_groupby_spark import Bins
+    the result, plus one broadcast job when reindexing onto a literal
+    domain, or one single-partition exchange job for a dense grid.  A
+    range-sampling sort would add two, a Python-row domain a Python worker.
+    Building the DataFrames runs no job."""
+    from dask_groupby_spark import Bins, groupby_agg, resample, xarray_reduce
 
     df = spark.range(2000).selectExpr(
         "CAST(id % 7 AS BIGINT) AS k", "CAST(id % 13 AS DOUBLE) AS v",
-        "CAST(id % 17 AS DOUBLE) / 4 AS w",
+        "CAST(id % 17 AS DOUBLE) / 4 AS w", "CAST(id % 5 AS INT) AS j",
+        "CAST(id % 3 AS STRING) AS s", "id AS idx",
+        "timestamp_seconds(id * 3600) AS ts",
     ).cache()
     try:
         df.count()
-        calls = {
-            "single_key": (groupby_reduce(df, "k", func="nansum", value="v"), 2),
-            "holistic": (groupby_reduce(df, "k", func="nanmedian", value="v"), 2),
-            "expected_groups": (
-                groupby_reduce(df, "k", func="nanmax", value="v",
-                               expected_groups=([0, 2, 5, 11],), fill_value=-1.0),
-                3,
-            ),
-            "bins": (
-                groupby_reduce(df, "w", func="nansum", value="v",
-                               expected_groups=(Bins([0.0, 1.0, 2.0, 4.0]),),
-                               fill_value=0.0),
-                3,
-            ),
-        }
+        sc = spark.sparkContext
+        sc.setJobGroup("job_floor_build", "job_floor_build")
+        try:
+            calls = {
+                "single_key": (groupby_reduce(df, "k", func="nansum", value="v"), 2),
+                "holistic": (groupby_reduce(df, "k", func="nanmedian", value="v"), 2),
+                "expected_groups": (
+                    groupby_reduce(df, "k", func="nanmax", value="v",
+                                   expected_groups=([0, 2, 5, 11],), fill_value=-1.0),
+                    3,
+                ),
+                "bins": (
+                    groupby_reduce(df, "w", func="nansum", value="v",
+                                   expected_groups=(Bins([0.0, 1.0, 2.0, 4.0]),),
+                                   fill_value=0.0),
+                    3,
+                ),
+                # dense grids: the aggregate's exchange, one single-partition
+                # exchange, the result
+                "two_key": (groupby_reduce(df, "k", "j", func="nanmean", value="v"), 3),
+                "three_key": (groupby_reduce(df, "k", "s", "j", func="nansum", value="v"), 3),
+                "xarray_two_key": (
+                    xarray_reduce(df, "k", func="nanmean", dims=("idx", "j"), dim="idx", value="w"),
+                    3,
+                ),
+                "mixed_expected": (
+                    groupby_agg(df, "k", "j", funcs=[("nansum", "v", "s"), ("count", "w", "n")],
+                                expected_groups=([0, 2, 11], None)),
+                    3,
+                ),
+                "resample_dense_extra_by": (
+                    resample(df, "ts", "6 hours", "nanmean", "v", "j", dense=True),
+                    3,
+                ),
+            }
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup("job_floor_build")) == []
         got = {k: _job_count(spark, out, f"job_floor_{k}") for k, (out, _) in calls.items()}
         assert got == {k: n for k, (_, n) in calls.items()}
     finally:
         df.unpersist()
+
+
+def test_grid_calls_leave_no_persisted_rdd(spark):
+    """A call leaves nothing persisted behind: the dense grid reads its
+    aggregate once, so nothing is pinned or cached for the caller to
+    release."""
+    from dask_groupby_spark import groupby_agg, resample, xarray_reduce
+
+    df = spark.range(3000).selectExpr(
+        "CAST(id % 7 AS INT) AS k", "CAST(id % 5 AS INT) AS j", "id AS idx",
+        "CAST(id % 13 AS DOUBLE) AS v", "timestamp_seconds(id * 1800) AS ts",
+    ).where("NOT (k = 3 AND j = 1)")
+    calls = {
+        "two_key": lambda: groupby_reduce(df, "k", "j", func="nanmean", value="v"),
+        "xarray_retained_dim": lambda: xarray_reduce(
+            df, "k", func="nansum", dims=("idx", "j"), dim="idx", value="v"),
+        "resample": lambda: resample(df, "ts", "1 day", "nanmax", "v", "j"),
+        "resample_dense_extra_by": lambda: resample(
+            df.where("idx < 500 OR idx > 2000"), "ts", "6 hours", "count", "v", "j", dense=True),
+        "mixed_expected": lambda: groupby_agg(
+            df, "k", "j", funcs=[("nansum", "v", "s")], expected_groups=([0, 3, 9], None)),
+    }
+    jsc = spark.sparkContext._jsc
+    for name, call in calls.items():
+        before = jsc.getPersistentRDDs().size()
+        call().toPandas()
+        assert jsc.getPersistentRDDs().size() == before, name
+
+
+def test_two_key_grid_plan_one_scan_two_exchanges(li):
+    """A 2-key reduce over parquet: one input scan, the aggregate's hash
+    exchange and one single-partition exchange; no grid join, no pinned
+    relation, no range-partitioned sort."""
+    import re as _re
+
+    out = groupby_reduce(li, "l_returnflag", "l_linestatus", func="nanmean", value="l_quantity")
+    plan = physical_plan(out)
+    assert len(_re.findall(r"^\(\d+\) Scan parquet", plan, _re.M)) == 1, plan
+    assert count_exchanges(out) == 2, plan
+    assert "SinglePartition" in plan, plan
+    for absent in ("BroadcastNestedLoopJoin", "LogicalRDD", "ExistingRDD", "rangepartitioning"):
+        assert absent not in plan, plan
+    keys = [(r["l_returnflag"], r["l_linestatus"]) for r in out.collect()]
+    assert keys == sorted(keys)
 
 
 def test_repeated_calls_compile_nothing(spark):

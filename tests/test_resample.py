@@ -125,7 +125,6 @@ def test_resample_dense_fractional_second_width(spark):
     assert got["2024-01-01T00:00:03"] == 3.0
     assert math.isnan(got["2024-01-01T00:00:01.500000"])  # empty grid cell
     assert len(got) == 7  # 0.0 .. 3.0 every 0.5s
-    out.resample_agg.unpersist()
 
 
 def test_resample_rejects_nonpositive_width(spark):
