@@ -117,9 +117,9 @@ def quantile_bins(
     (:func:`~dask_groupby_spark.operators.stats._pooled_exact_grid` —
     range-partitioned ranks, anchor-only collect, DuckDB-lerp) and bins
     map-side against literals — fully parallel at any scale.  The
-    GROUPED form ranks within each group (one window — the documented
-    per-group-quantile serialization, same class as the ``quantile``
-    reduction), joins the ≤ 2(q−1) anchor rows per group, and
+    GROUPED form ranks within each group (``groupby_rank``'s window —
+    the documented per-group-quantile serialization, same class as the
+    ``quantile`` reduction), joins the ≤ 2(q−1) anchor rows per group, and
     interpolates with the SAME ``lo·(1−d) + hi·d`` lerp IN-ENGINE, so
     the DuckDB oracle mirrors it bit-for-bit; binning is a broadcast
     join of |groups|·(q−1) edges + a map-side fold.
@@ -128,10 +128,8 @@ def quantile_bins(
     a huge group's rank pass spans many tasks — identical bins (the edge
     math reads values at ranks, which any tie order preserves); the
     global tier is already scalable and ignores ``method``.
-    ``method="auto"`` (DEFAULT): the tier choice reads ``max`` off the
-    per-group count table the edge math needs anyway (lazily
-    checkpointed, one tiny job — no separate probe aggregate) and picks
-    two_pass when some group exceeds ``rows_per_chunk`` rows.
+    ``method="auto"`` (DEFAULT): ``groupby_rank``'s own tier decision
+    picks two_pass when some group exceeds ``rows_per_chunk`` rows.
 
     The grouped form lazily PERSISTS the |groups|-row edge table and
     exposes it as ``res.qcut_edges`` — repeated identical calls reuse
@@ -139,11 +137,9 @@ def quantile_bins(
     ``res.qcut_edges.unpersist()`` to release, reading the attribute
     BEFORE transforming the result (it does not propagate).  r13 adds
     ``res.qcut_counts`` — the persisted |groups|-row count table (it
-    feeds three consumers in the edge pipeline; unpinned, each one
+    feeds two consumers in the edge pipeline; unpinned, each one
     re-aggregated the base table) — release it the same way.
     """
-    from pyspark.sql import Window
-
     if q < 2:
         raise ValueError(f"q must be >= 2, got {q}")
     if q > resolution_guard:
@@ -180,64 +176,34 @@ def quantile_bins(
     # reuses an Exchange across consumers, so every reader re-runs the
     # per-group sort (r9 plan audit)
     #
-    # ...and the count table itself is PERSISTED (r13): it feeds THREE
-    # consumers (`needed`, `spec_m`, and the auto probe), and each one
+    # ...and the count table itself is PERSISTED (r13): it feeds two
+    # consumers (`needed` and `spec_m`), and each one
     # re-aggregated the base table — the r12 grid-rescan disease; the edge
     # pipeline's plan carried 3 extra base scans (4 total, plan-audited;
     # sf1 edges-only slice 15.3 s vs 5.9 s for the rank pass it contains).
     # persist, NOT localCheckpoint, deliberately: a checkpoint injects a
     # fresh LogicalRDD per call, defeating CacheManager's canonicalized-
-    # plan dedup and with it the documented `qcut_edges` warm-call reuse
-    # (the r11 finding on the auto probe, same paragraph below).  The
-    # |groups|-row entry dedupes across calls the same way `qcut_edges`
+    # plan dedup and with it the documented `qcut_edges` warm-call reuse.
+    # The |groups|-row entry dedupes across calls the same way `qcut_edges`
     # does and is exposed as ``res.qcut_counts`` (same handle convention).
     n_tbl = vals.groupBy(*by_list).agg(F.count(F.lit(1)).alias("__n")).persist()
-    execution = method
-    if method == "auto":
-        # r11 (the dispatch_auto ladder, VERDICT r10 #1): a driver-only
-        # metadata row bound on the VALUES frame (parquet footers /
-        # cached-relation stats) proving total rows <= rows_per_chunk
-        # proves no group can exceed it — window tier, ZERO probe jobs.
-        from .plans import _metadata_row_bound
+    # per-group row numbers in value order: method "first" gives
+    # row_number semantics, and peers order by the value itself
+    # (idx_col=__v: tie order within equal values is arbitrary, but the
+    # VALUE at any rank — all the edge math needs — is order-invariant,
+    # so both rank tiers give identical bins)
+    from .core import groupby_rank
 
-        bound = _metadata_row_bound(vals, limit=rows_per_chunk)
-        if bound is not None and bound <= rows_per_chunk:
-            execution = "window"
-    if execution == "auto":
-        # auto probe: one plain max-count job over the aggregate the edge
-        # math needs anyway.  Deliberately NOT checkpointed into the
-        # downstream plan: a localCheckpoint injects a fresh LogicalRDD
-        # per call, which defeats CacheManager's canonicalized-plan dedup
-        # and with it the ``qcut_edges`` warm-call reuse below (measured:
-        # warm auto ran the full rank pass every call instead of hitting
-        # the edge cache).  The probe job is the auto tier's whole cost
-        # (~0.3 s on the cached sf0.1 bench input) — now paid only when
-        # the metadata bound above cannot rule the scale tier out.
-        mx = n_tbl.agg(F.max("__n")).collect()[0][0]
-        execution = "two_pass" if (mx or 0) > rows_per_chunk else "window"
-    if execution == "two_pass":
-        # scale escape for the per-group window sort (one group = one
-        # task): chunked ranks via the two-pass rank tier — method
-        # "first" gives row_number semantics, and peers order by the
-        # value itself (idx_col=__v: tie order within equal values is
-        # arbitrary, but the VALUE at any rank — all the edge math
-        # needs — is order-invariant; the window tier below orders
-        # identically, so either choice is bit-identical)
-        from .core import groupby_rank
-
-        ranked = groupby_rank(
-            vals,
-            *by_list,
-            value="__v",
-            method="first",
-            idx_col="__v",
-            alias="__r",
-            execution="two_pass",
-            rows_per_chunk=rows_per_chunk,
-        ).withColumn("__r", F.col("__r").cast("bigint"))
-    else:
-        w = Window.partitionBy(*by_list).orderBy("__v")
-        ranked = vals.withColumn("__r", F.row_number().over(w))
+    ranked = groupby_rank(
+        vals,
+        *by_list,
+        value="__v",
+        method="first",
+        idx_col="__v",
+        alias="__r",
+        execution=method,
+        rows_per_chunk=rows_per_chunk,
+    ).withColumn("__r", F.col("__r").cast("bigint"))
     # one row per (group, i): anchor ranks + interpolation fraction,
     # exactly numpy/DuckDB linear interpolation arithmetic
     i_col = F.explode(

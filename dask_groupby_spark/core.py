@@ -474,14 +474,13 @@ def groupby_scan(
     :mod:`dask_groupby_spark.two_pass`.
 
     ``method="auto"`` (DEFAULT — a user who never reads the scale docs
-    still gets the plan that survives few/huge groups): materializes the
-    per-group ``(min(idx), max(idx), count)`` chunking stats — the exact
-    pass-0 aggregate two_pass needs — and picks two_pass when some group
-    exceeds ``rows_per_chunk`` rows AND the func/idx dtype support it;
-    otherwise the plain window.  On the scale path the probe's persisted
-    stats frame is passed straight into two_pass, so dispatch is FREE
-    there; on the window path it costs one map-combined aggregate over
-    the key+idx columns only.
+    still gets the plan that survives few/huge groups): picks two_pass
+    when some group exceeds ``rows_per_chunk`` rows AND the func/idx
+    dtype support it; otherwise the plain window.  The first call on an
+    input probes once (one map-combined count over the key+idx columns,
+    skipped when parquet footers already bound the rows); the memo
+    serves repeated calls, and nothing is persisted
+    (:func:`dask_groupby_spark.two_pass.choose_tier`).
 
     Rows with missing group labels pass through with a NULL/NaN result
     (the reference excludes code −1 elements from scans likewise).
@@ -541,24 +540,10 @@ def groupby_scan(
             ok = ok & ~F.isnan(k)
         label_ok = ok if label_ok is None else (label_ok & ok)
 
-    pre_stats = None
-    if method == "auto":
-        from .two_pass import TWO_PASS_FUNCS, _idx_numeric, dispatch_auto
+    from .two_pass import TWO_PASS_FUNCS, choose_tier
 
-        eligible = spec.name in TWO_PASS_FUNCS
-        idxn = None
-        if eligible:
-            try:
-                idxn = _idx_numeric(work, idx_col)
-            except ValueError:
-                eligible = False
-        if eligible:
-            method, pre_stats = dispatch_auto(
-                work, list(by), idxn, rows_per_chunk
-            )
-        else:
-            method = "window"
-    if method == "two_pass":
+    axis = idx_col if spec.name in TWO_PASS_FUNCS else None
+    if choose_tier(method, work, list(by), axis, rows_per_chunk) == "two_pass":
         from .two_pass import scan_two_pass
 
         ctx.kw["__idx_col_name"] = idx_col
@@ -572,11 +557,6 @@ def groupby_scan(
             label_ok,
             dt_rules.na_lit(result_dt),
             rows_per_chunk=rows_per_chunk,
-            stats=pre_stats,
-        )
-    if method != "window":
-        raise ValueError(
-            f"method must be 'window', 'two_pass', or 'auto', got {method!r}"
         )
 
     col = spec.build(ctx, w).cast(result_dt)
@@ -646,11 +626,11 @@ def groupby_rank(
     is pandas' tie-rule kwarg here.)  See
     :func:`dask_groupby_spark.two_pass.rank_two_pass`.
 
-    ``execution="auto"`` (DEFAULT): probes per-group VALID-row counts
-    (the probe is rank_two_pass's own pass-0 aggregate, passed through —
-    free on the scale path) and picks two_pass when some group exceeds
-    ``rows_per_chunk`` valid rows and the value dtype is bucketable;
-    otherwise the window.  Identical ranks either way (asserted in
+    ``execution="auto"`` (DEFAULT): picks two_pass when some group
+    exceeds ``rows_per_chunk`` valid rows and the value dtype is
+    bucketable; otherwise the window.  The first call probes per-group
+    valid-row counts once, the memo serves repeated calls, and nothing
+    is persisted.  Identical ranks either way (asserted in
     tests/test_two_pass.py).
     """
     if method not in ("average", "min", "max", "dense", "first"):
@@ -658,43 +638,24 @@ def groupby_rank(
     if method == "first" and idx_col is None:
         raise ValueError('method="first" requires idx_col= (appearance order)')
     out_name = alias or "rank"
-    pre_stats = None
-    if execution == "auto":
-        from .two_pass import _idx_numeric, dispatch_auto
-
-        try:
-            vnum = _idx_numeric(df, value)
-        except ValueError:
-            vnum = None
-        if vnum is not None:
-            va = F.col(value).isNotNull()
-            if isinstance(df.schema[value].dataType, (T.FloatType, T.DoubleType)):
-                va = va & ~F.isnan(F.col(value))
-            execution, pre_stats = dispatch_auto(
-                df.where(va),
-                list(by),
-                vnum if ascending else -vnum,
-                rows_per_chunk,
-                "__tp_nv",
-            )
-        else:
-            execution = "window"
-    if execution == "two_pass":
-        from .two_pass import rank_two_pass
-
-        return rank_two_pass(
-            df, by, value, method, ascending, pct, idx_col, out_name,
-            rows_per_chunk=rows_per_chunk, stats=pre_stats,
-        )
-    if execution != "window":
-        raise ValueError(
-            f"execution must be 'window', 'two_pass', or 'auto', got {execution!r}"
-        )
-
     v = F.col(value)
     valid = v.isNotNull()
     if isinstance(df.schema[value].dataType, (T.FloatType, T.DoubleType)):
         valid = valid & ~F.isnan(v)
+    from .two_pass import choose_tier
+
+    # pass 0 counts valid rows only: missing values never consume a rank
+    tier = choose_tier(
+        execution, df.where(valid), list(by), value, rows_per_chunk, name="execution"
+    )
+    if tier == "two_pass":
+        from .two_pass import rank_two_pass
+
+        return rank_two_pass(
+            df, by, value, method, ascending, pct, idx_col, out_name,
+            rows_per_chunk=rows_per_chunk,
+        )
+
     clean = F.when(valid, v)  # NULL for missing → sorts last in both orders
 
     order = clean.asc_nulls_last() if ascending else clean.desc_nulls_last()
@@ -911,10 +872,10 @@ def groupby_interpolate(
     so one huge series spans many tasks instead of one
     (:func:`dask_groupby_spark.two_pass.interpolate_two_pass`); same
     output, same ``limit`` semantics (the global row number is rebuilt
-    from chunk-count prefixes).  ``method="auto"`` (DEFAULT): per-group
-    row-count probe (= two_pass's pass-0 aggregate, passed through — free
-    on the scale path) picks two_pass when some group exceeds
-    ``rows_per_chunk`` rows, else the window.
+    from chunk-count prefixes).  ``method="auto"`` (DEFAULT): picks
+    two_pass when some group exceeds ``rows_per_chunk`` rows, else the
+    window; the first call probes per-group row counts once, the memo
+    serves repeated calls, and nothing is persisted.
     """
     from .dtypes import time_to_seconds
 
@@ -935,25 +896,16 @@ def groupby_interpolate(
     x = time_to_seconds(df, order_cols[0])
     if limit is not None and limit < 1:
         raise ValueError("limit must be >= 1")
-    pre_stats = None
-    if method == "auto":
-        from .two_pass import dispatch_auto
+    from .two_pass import choose_tier
 
-        # the lerp axis is numeric by construction (time_to_seconds /
-        # cast), so the only auto gate is group size
-        method, pre_stats = dispatch_auto(
-            df, list(by), x.cast("double"), rows_per_chunk
-        )
-    if method == "two_pass":
+    # the lerp axis is numeric by construction (time_to_seconds / cast),
+    # so the only auto gate is group size
+    if choose_tier(method, df, list(by), x.cast("double"), rows_per_chunk) == "two_pass":
         from .two_pass import interpolate_two_pass
 
         return interpolate_two_pass(
             df, by, value, order_cols, out, limit, missing, x,
-            rows_per_chunk=rows_per_chunk, stats=pre_stats,
-        )
-    if method != "window":
-        raise ValueError(
-            f"method must be 'window', 'two_pass', or 'auto', got {method!r}"
+            rows_per_chunk=rows_per_chunk,
         )
     base = Window.partitionBy(*by).orderBy(*[F.col(c) for c in order_cols])
     # forward-looking carries run over the DESC-reversed sort with the

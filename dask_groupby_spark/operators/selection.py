@@ -93,9 +93,9 @@ def sessionize(
     session prefix is a running sum of per-chunk boundary counts; one huge
     key's stream spans many tasks instead of one
     (:func:`dask_groupby_spark.two_pass.sessionize_two_pass`).
-    ``method="auto"`` (DEFAULT): per-key row-count probe (= two_pass's
-    pass-0 aggregate, passed through — free on the scale path) picks
-    two_pass when some key exceeds ``rows_per_chunk`` events.
+    ``method="auto"`` (DEFAULT): picks two_pass when some key exceeds
+    ``rows_per_chunk`` events; the first call probes per-key row counts
+    once, the memo serves repeated calls, and nothing is persisted.
 
     Output: input columns + ``out`` (0-based session index per key).
     """
@@ -106,22 +106,12 @@ def sessionize(
             f"out={out!r} collides with an existing column — rename it first"
         )
     ts = time_to_seconds(df, ts_col)
-    pre_stats = None
-    if method == "auto":
-        from ..two_pass import dispatch_auto
+    from ..two_pass import choose_tier
 
-        method, pre_stats = dispatch_auto(df, list(by), ts, rows_per_chunk)
-    if method == "two_pass":
+    if choose_tier(method, df, list(by), ts, rows_per_chunk) == "two_pass":
         from ..two_pass import sessionize_two_pass
 
-        return sessionize_two_pass(
-            df, by, ts_col, gap, out, ts, rows_per_chunk=rows_per_chunk,
-            stats=pre_stats,
-        )
-    if method != "window":
-        raise ValueError(
-            f"method must be 'window', 'two_pass', or 'auto', got {method!r}"
-        )
+        return sessionize_two_pass(df, by, ts_col, gap, out, ts, rows_per_chunk=rows_per_chunk)
     w = Window.partitionBy(*by).orderBy(F.col(ts_col).asc())
     prev = F.lag(ts).over(w)
     boundary = F.when(prev.isNull() | ((ts - prev) > gap), 1).otherwise(0)

@@ -161,9 +161,10 @@ def dense_grid(
     2. that row splits into a cell row (tag 0) and an entries row (tag 1);
        ``inline`` expands the first domain or the entries, then one
        ``explode`` per later key expands its domain on cell rows;
-    3. one window ordered by (keys, tag) over the single partition the
-       global ``agg`` left (no exchange): a cell takes the next row's
-       values when that row is an entry with equal keys.
+    3. one window partitioned by the keys and ordered by the tag, over
+       the single partition the global ``agg`` left (no exchange, one
+       sort on (keys, tag)): a cell takes the next row's values when that
+       row is an entry.
 
     All of it runs in one task.  No row holds the grid, only the domains
     or the entries; Spark's 2 GB row cap bounds the entries at about
@@ -219,10 +220,8 @@ def dense_grid(
                 F.when(tag == _CELL, F.col(f"__d{i}")).otherwise(F.array(F.col(k)))
             ).alias(k),
         )
-    nxt = F.lead(F.struct("__t", *keys, *values)).over(Window.orderBy(*keys, "__t"))
+    nxt = F.lead(F.struct("__t", *values)).over(Window.partitionBy(*keys).orderBy("__t"))
     hit = F.col("__n.__t") == _ENTRY
-    for k in keys:
-        hit = hit & F.col("__n")[k].eqNullSafe(F.col(k))
     return (
         rows.select("__t", *keys, nxt.alias("__n"))
         .where(tag == _CELL)

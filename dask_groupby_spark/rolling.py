@@ -116,11 +116,11 @@ def groupby_rolling(
     arithmetically — convert to a range frame on a dense axis to scale.
 
     ``method="auto"`` (DEFAULT): when the frame is a two-pass-able range
-    frame (``lo <= 0 <= hi``, finite, numeric/timestamp/date idx), a
-    per-group row-count probe (= two_pass's pass-0 aggregate, passed
-    through — free on the scale path) picks two_pass when some group
-    exceeds ``rows_per_chunk`` rows; row-count frames and small-group
-    inputs keep the window.
+    frame (``lo <= 0 <= hi``, finite, numeric/timestamp/date idx), picks
+    two_pass when some group exceeds ``rows_per_chunk`` rows; row-count
+    frames and small-group inputs keep the window.  The first call probes
+    per-group row counts once, the memo serves repeated calls, and
+    nothing is persisted.
     """
     if isinstance(funcs, str):
         funcs = (funcs,)
@@ -265,27 +265,10 @@ def groupby_rolling(
         range_between = (lo_n, hi_n)
     else:
         frac = False
-    pre_stats = None
-    if method == "auto":
-        from .two_pass import _idx_numeric, dispatch_auto
+    from .two_pass import choose_tier
 
-        eligible = (
-            range_between is not None
-            and range_between[0] <= 0 <= range_between[1]
-        )
-        idxn = None
-        if eligible:
-            try:
-                idxn = _idx_numeric(df, idx_col)
-            except ValueError:
-                eligible = False
-        if eligible:
-            method, pre_stats = dispatch_auto(
-                df, list(by), idxn, rows_per_chunk
-            )
-        else:
-            method = "window"
-    if method == "two_pass":
+    ranged = range_between is not None and range_between[0] <= 0 <= range_between[1]
+    if choose_tier(method, df, list(by), idx_col if ranged else None, rows_per_chunk) == "two_pass":
         if range_between is None:
             raise ValueError(
                 "method='two_pass' requires range_between= (row-count frames "
@@ -304,11 +287,6 @@ def groupby_rolling(
             hi,
             lambda fdf, w: apply_frames(fdf, w, Window.partitionBy(*by, _CHUNK)),
             rows_per_chunk=rows_per_chunk,
-            stats=pre_stats,
-        )
-    if method != "window":
-        raise ValueError(
-            f"method must be 'window', 'two_pass', or 'auto', got {method!r}"
         )
 
     if range_between is not None and frac:

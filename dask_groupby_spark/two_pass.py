@@ -42,14 +42,20 @@ Supported funcs: the associative-combine family — cumsum/cumprod/cummax/
 cummin (+nan variants), cumcount, ffill, bfill.  ``shift``/``diff`` are
 offset-by-rows, not scans with an associative combine; they keep the window
 path (their frames need neighbor rows, not a prefix state).
+
+Every two-pass plan (scan, range rolling, interpolate, rank, both EWMA
+recurrences, sessionize) starts from the one chunking skeleton
+:func:`_chunked` and computes its pass 0 inside its own query: nothing is
+persisted, and Spark reuses the stats broadcast across the plan's
+branches.  Every caller picks its tier through :func:`choose_tier`.
 """
 
 from __future__ import annotations
 
 from collections import OrderedDict
-from typing import Optional
+from typing import Optional, Union
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -120,32 +126,83 @@ def _nan_safe_offsets(
     return out.drop(*marks.values())
 
 
-def _chunk_of(idxn, idx_col: str | None = None, sentinel_when=None):
-    """Value-bucketed chunk index from the joined __tp_a/__tp_b/__tp_c
-    per-group stats: floor((idx - a) / width) clamped into [0, c), with the
-    degenerate-span (single idx value / empty group) collapse to chunk 0.
-    Rows matching the sentinel predicate (``sentinel_when``, defaulting
-    to ``idx_col IS NULL``) go to chunk -1 — they sort first under the
-    window path's orderBy, or carry no rank/position at all (rank's
-    ``~valid``).  ONE definition for the seven formerly hand-copied
-    blocks in this module (r9 review)."""
+def _chunked(
+    df: DataFrame,
+    keys: list,
+    axis: Column,
+    rows_per_chunk: int,
+    max_chunks: Optional[int] = 4096,
+    *,
+    sentinel: Optional[Column] = None,
+    margin: float = 0.0,
+    counted: Optional[DataFrame] = None,
+    count_as: Optional[str] = None,
+    keep_stats: bool = False,
+) -> DataFrame:
+    """The chunking skeleton of every two-pass plan: pass 0 → chunk count
+    → null-safe stats join → chunk id.  Returns ``df`` plus ``__tp_chunk``.
+
+    Pass 0 is :func:`_chunk_stats` over ``counted`` (default ``df``),
+    computed inside the caller's query.  A group of n rows gets
+    ``ceil(n / rows_per_chunk)`` chunks, at least 1 and at most
+    ``max_chunks`` (``None``: no cap).  A row's chunk is
+    ``floor((axis - min) / width)`` clamped into the group's chunks —
+    monotone in the axis, so chunks are axis-contiguous; a group with a
+    single axis value (or none) is one chunk.
+
+    - ``sentinel``: rows that go to chunk −1 (default: a NULL axis).
+    - ``margin``: rolling's frame context width; chunks are made at least
+      this wide, so a frame only ever reaches the adjacent chunk.
+    - ``count_as``: keep the per-group count under this name.
+    - ``keep_stats``: keep ``__tp_a``/``__tp_b``/``__tp_c`` (min, max,
+      chunk count) for the caller's own chunk-edge arithmetic.
+    """
+    _no_tp_collisions(df)
+    stats = _chunk_stats(df if counted is None else counted, keys, axis)
+    one = F.lit(1).cast("long")
+    nchunks = F.greatest(one, F.ceil(F.col("__tp_n") / F.lit(rows_per_chunk)))
+    if max_chunks is not None:
+        nchunks = F.least(F.lit(max_chunks).cast("long"), nchunks)
+    if margin > 0:
+        span = F.col("__tp_b") - F.col("__tp_a")
+        nchunks = F.least(nchunks, F.greatest(one, F.floor(span / F.lit(margin)).cast("long")))
+    stats = stats.withColumn("__tp_c", nchunks)
+    stats = stats.withColumnRenamed("__tp_n", count_as) if count_as else stats.drop("__tp_n")
+
     width = (F.col("__tp_b") - F.col("__tp_a")) / F.col("__tp_c").cast("double")
-    c = F.when(
+    chunk = F.when(
         F.col("__tp_a").isNull() | (width <= F.lit(0.0)), F.lit(0).cast("long")
     ).otherwise(
         F.least(
             F.col("__tp_c") - 1,
-            F.greatest(
-                F.lit(0).cast("long"),
-                F.floor((idxn - F.col("__tp_a")) / width),
-            ),
+            F.greatest(F.lit(0).cast("long"), F.floor((axis - F.col("__tp_a")) / width)),
         )
     )
-    if sentinel_when is None and idx_col is not None:
-        sentinel_when = F.col(idx_col).isNull()
-    if sentinel_when is not None:
-        c = F.when(sentinel_when, F.lit(-1).cast("long")).otherwise(c)
-    return c
+    chunk = F.when(
+        axis.isNull() if sentinel is None else sentinel, F.lit(-1).cast("long")
+    ).otherwise(chunk)
+    out = _ns_join(df, stats, keys).withColumn(_CHUNK, chunk)
+    return out if keep_stats else out.drop("__tp_a", "__tp_b", "__tp_c")
+
+
+def _prior(keys: list, desc: bool = False) -> WindowSpec:
+    """Exclusive prefix over a group's chunk states in chunk order.  With
+    ``desc`` the order is reversed: "following" carries run over the
+    reversed order with the accumulating frame, because Spark re-scans an
+    unboundedFollowing frame's suffix per row (r8)."""
+    order = F.col(_CHUNK).desc() if desc else F.col(_CHUNK)
+    return Window.partitionBy(*keys).orderBy(order).rowsBetween(Window.unboundedPreceding, -1)
+
+
+def _local(keys: list, *order) -> WindowSpec:
+    """A chunk's local window, partitioned by (keys, chunk): the plan's one
+    big-data shuffle, whose largest task is one chunk."""
+    return Window.partitionBy(*keys, _CHUNK).orderBy(*order)
+
+
+def _upto(w: WindowSpec) -> WindowSpec:
+    """The running frame: everything up to the current row."""
+    return w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
 
 def _no_tp_collisions(df: DataFrame) -> None:
@@ -194,25 +251,23 @@ def _idx_numeric(df: DataFrame, idx_col: str) -> Column:
     )
 
 
-def _chunk_stats(df: DataFrame, keys: list, idxn, count_col: str = "__tp_n") -> DataFrame:
+def _chunk_stats(df: DataFrame, keys: list, idxn) -> DataFrame:
     """Pass 0 of every two-pass plan: the per-group chunking stats —
     min/max of the bucketing axis plus the row count.  Map-side combined,
-    column-pruned to keys+axis, KB-class output.  One definition for the
-    seven formerly hand-copied aggregates in this module AND the auto-tier
-    probe (the probe IS this aggregate, so dispatch costs nothing extra
-    when the scale tier is chosen)."""
+    column-pruned to keys+axis, KB-class output.  The auto-tier probe
+    reads its max count off the same aggregate."""
     return df.groupBy(*keys).agg(
         F.min(idxn).alias("__tp_a"),
         F.max(idxn).alias("__tp_b"),
-        F.count(F.lit(1)).alias(count_col),
+        F.count(F.lit(1)).alias("__tp_n"),
     )
 
 
 # Probe memo: (semanticHash, columns, keys, idx expr, file signature) ->
-# observed max-group-size from a prior probe THIS session.  Only ever used
-# to re-pick the window tier without a job — the two tiers are bit-exact
-# (test_two_pass.py parity), so even a semanticHash collision could only
-# change the plan shape, never the result.  Bounded LRU.  The file
+# observed max-group-size from a prior probe THIS session, which answers a
+# repeated call in both directions without a job — the two tiers are
+# bit-exact (test_two_pass.py parity), so even a semanticHash collision
+# could only change the plan shape, never the result.  Bounded LRU.  The file
 # signature (ADVICE r11 #3) folds the sorted input-file names plus local
 # mtime/size into the key, so a mid-session parquet rewrite (new part-file
 # names, or same names with new stat) simply misses the memo and re-probes
@@ -271,56 +326,71 @@ def _memo_key(df: DataFrame, keys: list, idxn):
         return None
 
 
-def dispatch_auto(
-    df: DataFrame,
-    keys: list,
-    idxn,
-    rows_per_chunk: int,
-    count_col: str = "__tp_n",
-):
-    """Auto-tier dispatch for the window-shaped ops (VERDICT r9 #2: the
-    scale tier must be the DEFAULT, and the probe must be free on the
-    scale path).  Decision ladder, cheapest first (VERDICT r10 #1 — the
-    probe used to be paid exactly when it bought nothing):
+def dispatch_auto(df: DataFrame, keys: list, idxn, rows_per_chunk: int) -> str:
+    """Auto-tier dispatch for the window-shaped ops: ``"two_pass"`` when
+    some group of ``df`` exceeds ``rows_per_chunk`` rows, else
+    ``"window"``.  Decision ladder, cheapest first:
 
     1. ``__tp_*`` namespace collision -> window, no job (auto must never
        turn a previously-working call into an error).
-    2. Memoized probe result for this (plan, keys, idx) showing no group
-       exceeds ``rows_per_chunk`` -> window, no job.
+    2. Memoized max group size for this (plan, keys, idx) -> either tier,
+       no job.
     3. Parquet-footer row bound (:func:`_metadata_row_bound`) <=
        ``rows_per_chunk`` -> window, no job: if the WHOLE frame fits in
        one chunk, no group can exceed it.  Driver-only footer reads —
        this is the common small-scale path.
-    4. Otherwise the probe: materialize the per-group chunking stats
-       (:func:`_chunk_stats`, persisted) and read ``max(count)`` off the
-       cached KB-class table — ONE small job whose work is exactly the
-       two-pass plan's pass 0.  Returns ``("two_pass", stats)`` when some
-       group exceeds ``rows_per_chunk`` rows (pass ``stats`` through so
-       the scale tier skips its own pass 0 — auto is then FREE on the
-       scale path), else ``("window", None)`` with the probe's cache
-       released and the max-group-size memoized for step 2."""
+    4. Otherwise the probe: ``max(count)`` over the per-group chunking
+       stats (:func:`_chunk_stats`) — ONE small job, memoized for step 2.
+       Nothing is persisted: the two-pass plan computes its own pass 0."""
     if any(c.startswith("__tp_") for c in df.columns):
-        return "window", None
+        return "window"
     key = _memo_key(df, keys, idxn)
-    if key is not None:
-        known_mx = _AUTO_MEMO.get(key)
-        if known_mx is not None and known_mx <= rows_per_chunk:
-            _AUTO_MEMO.move_to_end(key)
-            return "window", None
-    bound = _metadata_row_bound(df, limit=rows_per_chunk)
-    if bound is not None and bound <= rows_per_chunk:
-        return "window", None
-    stats = _chunk_stats(df, keys, idxn, count_col).persist()
-    mx = stats.agg(F.max(count_col)).collect()[0][0] or 0
-    if key is not None:
-        _AUTO_MEMO[key] = mx
+    mx = None if key is None else _AUTO_MEMO.get(key)
+    if mx is not None:
         _AUTO_MEMO.move_to_end(key)
-        while len(_AUTO_MEMO) > _AUTO_MEMO_CAP:
-            _AUTO_MEMO.popitem(last=False)
-    if mx > rows_per_chunk:
-        return "two_pass", stats
-    stats.unpersist()
-    return "window", None
+    else:
+        bound = _metadata_row_bound(df, limit=rows_per_chunk)
+        if bound is not None and bound <= rows_per_chunk:
+            return "window"
+        mx = _chunk_stats(df, keys, idxn).agg(F.max("__tp_n")).collect()[0][0] or 0
+        if key is not None:
+            _AUTO_MEMO[key] = mx
+            while len(_AUTO_MEMO) > _AUTO_MEMO_CAP:
+                _AUTO_MEMO.popitem(last=False)
+    return "two_pass" if mx > rows_per_chunk else "window"
+
+
+def choose_tier(
+    method: str,
+    df: DataFrame,
+    keys: list,
+    axis: Union[Column, str, None],
+    rows_per_chunk: int,
+    *,
+    fallback: str = "window",
+    name: str = "method",
+) -> str:
+    """The one tier decision of every window-shaped op.  ``method`` must
+    be ``fallback`` (the op's single-window tier), ``"two_pass"`` or
+    ``"auto"``; an explicit tier is returned as is.  ``auto`` picks
+    through :func:`dispatch_auto` over ``df`` (the rows pass 0 would
+    count), or ``fallback`` when the two-pass tier cannot take the input:
+    ``axis`` is None, or names a column that is not numeric, timestamp or
+    date.  The first call probes once; the memo serves repeated calls."""
+    if method not in (fallback, "two_pass", "auto"):
+        raise ValueError(
+            f"{name} must be {fallback!r}, 'two_pass', or 'auto', got {method!r}"
+        )
+    if method != "auto":
+        return method
+    if isinstance(axis, str):
+        try:
+            axis = _idx_numeric(df, axis)
+        except ValueError:
+            axis = None
+    if axis is None or dispatch_auto(df, keys, axis, rows_per_chunk) == "window":
+        return fallback
+    return "two_pass"
 
 
 def scan_two_pass(
@@ -334,7 +404,6 @@ def scan_two_pass(
     na_value: Column,
     rows_per_chunk: int = 2_000_000,
     max_chunks: int = 4096,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Execute one scan func via the two-pass plan.  Returns ``work`` plus
     the result column ``out_name`` — same contract as the window path in
@@ -342,9 +411,7 @@ def scan_two_pass(
 
     ``ctx`` is the shared scan Ctx (v/clean/missing/valid/idx); ``label_ok``
     the missing-group-label gate (None when no keys can be missing);
-    ``na_value`` the NA literal of the result dtype.  ``stats``: the
-    already-persisted :func:`_chunk_stats` frame from the auto probe —
-    when given, pass 0 is skipped (dispatch was free).
+    ``na_value`` the NA literal of the result dtype.
     """
     _no_tp_collisions(work)
     if func_name not in TWO_PASS_FUNCS:
@@ -353,29 +420,10 @@ def scan_two_pass(
             f"{sorted(TWO_PASS_FUNCS)} (shift/diff stay on the window path)"
         )
     keys = list(by)
-    idx_col_name = None
     # Ctx.idx is F.col(idx_col); recover the name from the caller's frame
     # is fragile — require it explicitly via ctx.kw stash instead.
     idx_col_name = ctx.kw["__idx_col_name"]
-    idxn = _idx_numeric(work, idx_col_name)
-
-    # ---- pass 0: per-group chunking stats (tiny; map-side combined) -------
-    # KB-class per-group table consumed by several plan branches; AQE never
-    # reuses an Exchange across consumers, so persist to keep the source
-    # scan under it single-execution (LRU reclaims the KB entry; the
-    # returned frame exposes it via the two_pass_stats handle).  The
-    # persist sits on the RAW aggregate so the auto probe's frame slots in
-    # directly; the __tp_c projection on top reads cached rows.
-    raw = stats if stats is not None else _chunk_stats(work, keys, idxn).persist()
-    nchunks = F.least(
-        F.lit(max_chunks).cast("long"),
-        F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rows_per_chunk))),
-    )
-    stats = raw.withColumn("__tp_c", nchunks).drop("__tp_n")
-
-    joined = _ns_join(work, stats, keys)
-    chunk = _chunk_of(idxn, idx_col_name)
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c")
+    big = _chunked(work, keys, _idx_numeric(work, idx_col_name), rows_per_chunk, max_chunks)
 
     # ---- pass 1: per-(group, chunk) states (tiny output) ------------------
     skip_name = _SKIP_OF.get(func_name, func_name)
@@ -384,41 +432,18 @@ def scan_two_pass(
     chunk_states = big.groupBy(*keys, _CHUNK).agg(*state_aggs)
 
     # ---- exclusive prefix of states per group (tiny window) ---------------
-    w_prec = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(_CHUNK))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # "following" combines run over the DESC chunk order with the
-    # accumulating frame (unboundedFollowing frames re-scan the suffix per
-    # row in Spark — O(n²); harmless on this tiny table but the convention
-    # is uniform with the big-data windows below, r8)
-    w_follow = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(_CHUNK).desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     offsets = chunk_states.select(
-        *keys, _CHUNK, *_offset_exprs(skip_name, propagating, w_prec, w_follow)
+        *keys, _CHUNK,
+        *_offset_exprs(skip_name, propagating, _prior(keys), _prior(keys, desc=True)),
     )
 
     # ---- pass 2: local scan + recombine (the ONE big-data shuffle) --------
     out = _ns_join(big, offsets, keys + [_CHUNK])
-    if func_name == "bfill":
-        # ffill on the DESC-reversed order — NOT first() over a
-        # currentRow..unboundedFollowing frame, which Spark evaluates by
-        # re-scanning the chunk suffix per row (O(chunk²), r8 finding)
-        w_local = (
-            Window.partitionBy(*keys, _CHUNK)
-            .orderBy(F.col(idx_col_name).desc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    else:
-        w_local = (
-            Window.partitionBy(*keys, _CHUNK)
-            .orderBy(F.col(idx_col_name))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
+    # bfill is ffill on the DESC-reversed order — NOT first() over a
+    # currentRow..unboundedFollowing frame, which Spark evaluates by
+    # re-scanning the chunk suffix per row (O(chunk²), r8 finding)
+    idx = F.col(idx_col_name)
+    w_local = _upto(_local(keys, idx.desc() if func_name == "bfill" else idx))
     col = _combine(skip_name, ctx, w_local, propagating, result_dt)
     col = col.cast(result_dt)
     if ctx.is_float and func_name not in ("cumcount",):
@@ -430,9 +455,7 @@ def scan_two_pass(
         col = F.when(label_ok, col).otherwise(na_value)
     # restore the caller's column order (join(on=keys) fronts the keys),
     # substituting in place when out_name overwrites an existing column
-    res = _select_with_out(out, work.columns, out_name, col)
-    res.two_pass_stats = raw  # persist-handle convention (bm25 precedent)
-    return res
+    return _select_with_out(out, work.columns, out_name, col)
 
 
 def rolling_two_pass(
@@ -444,7 +467,6 @@ def rolling_two_pass(
     build_exprs,
     rows_per_chunk: int = 2_000_000,
     max_chunks: int = 4096,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Two-pass execution for RANGE-frame rolling aggregates
     (``rangeBetween(lo, hi)``, lo <= 0 <= hi, both finite).
@@ -465,76 +487,42 @@ def rolling_two_pass(
     output columns (the caller's existing two-stage builder — semantics
     stay in rolling.py, only the partitioning here).
     """
-    _no_tp_collisions(df)
     keys = list(by)
     idxn = _idx_numeric(df, idx_col)
-    margin = float(max(-lo, hi, 0.0))
-
-    raw = stats if stats is not None else _chunk_stats(df, keys, idxn).persist()
-    nchunks = F.least(
-        F.lit(max_chunks).cast("long"),
-        F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rows_per_chunk))),
+    # chunk width must be >= the context margin, so fringe replication
+    # never has to reach beyond the adjacent chunk
+    joined = _chunked(
+        df, keys, idxn, rows_per_chunk, max_chunks,
+        margin=float(max(-lo, hi, 0.0)), keep_stats=True,
     )
-    if margin > 0:
-        # chunk width must be >= the context margin, so fringe replication
-        # never has to reach beyond the adjacent chunk
-        span = F.col("__tp_b") - F.col("__tp_a")
-        nchunks = F.least(
-            nchunks,
-            F.greatest(
-                F.lit(1).cast("long"), F.floor(span / F.lit(margin)).cast("long")
-            ),
-        )
-    # persist sits on the raw aggregate (KB-class; AQE never reuses an
-    # Exchange across consumers) — see scan_two_pass; auto probe slots in
-    stats = raw.withColumn("__tp_c", nchunks).drop("__tp_n")
-
-    joined = _ns_join(df, stats, keys)
-    c0 = _chunk_of(idxn, idx_col)
-    joined = joined.withColumn("__tp_c0", c0)
-    # chunk width, re-derived for the fringe bounds below (the chunk index
-    # itself comes from the shared _chunk_of)
+    c0 = F.col(_CHUNK)
     width = (F.col("__tp_b") - F.col("__tp_a")) / F.col("__tp_c").cast("double")
 
     # fringe replication: (chunk, is_ctx) membership array, exploded.
     # tail rows (within |lo| of the chunk's upper edge) also serve chunk+1;
     # head rows (within hi of the lower edge) also serve chunk-1.
-    upper = F.col("__tp_a") + (F.col("__tp_c0") + 1).cast("double") * width
-    lower = F.col("__tp_a") + F.col("__tp_c0").cast("double") * width
-    members = F.array(
-        F.struct(F.col("__tp_c0").alias("c"), F.lit(0).alias("ctx"))
-    )
+    upper = F.col("__tp_a") + (c0 + 1).cast("double") * width
+    lower = F.col("__tp_a") + c0.cast("double") * width
+    members = F.array(F.struct(c0.alias("c"), F.lit(0).alias("ctx")))
     if lo < 0:
         members = F.when(
-            (F.col("__tp_c0") >= 0)
-            & (F.col("__tp_c0") < F.col("__tp_c") - 1)
-            & (idxn >= upper - F.lit(-lo)),
-            F.concat(
-                members,
-                F.array(F.struct((F.col("__tp_c0") + 1).alias("c"), F.lit(1).alias("ctx"))),
-            ),
+            (c0 >= 0) & (c0 < F.col("__tp_c") - 1) & (idxn >= upper - F.lit(-lo)),
+            F.concat(members, F.array(F.struct((c0 + 1).alias("c"), F.lit(1).alias("ctx")))),
         ).otherwise(members)
     if hi > 0:
         members = F.when(
-            (F.col("__tp_c0") > 0) & (idxn < lower + F.lit(hi)),
-            F.concat(
-                members,
-                F.array(F.struct((F.col("__tp_c0") - 1).alias("c"), F.lit(1).alias("ctx"))),
-            ),
+            (c0 > 0) & (idxn < lower + F.lit(hi)),
+            F.concat(members, F.array(F.struct((c0 - 1).alias("c"), F.lit(1).alias("ctx")))),
         ).otherwise(members)
     big = (
         joined.withColumn("__tp_m", F.explode(members))
         .withColumn(_CHUNK, F.col("__tp_m.c"))
         .withColumn("__tp_ctx", F.col("__tp_m.ctx"))
-        .drop("__tp_m", "__tp_a", "__tp_b", "__tp_c", "__tp_c0")
+        .drop("__tp_m", "__tp_a", "__tp_b", "__tp_c")
     )
 
     if float(lo).is_integer() and float(hi).is_integer():
-        w_local = (
-            Window.partitionBy(*keys, _CHUNK)
-            .orderBy(F.col(idx_col))
-            .rangeBetween(int(lo), int(hi))
-        )
+        w_local = _local(keys, F.col(idx_col)).rangeBetween(int(lo), int(hi))
     else:
         # fractional range offsets: the WindowSpec binding is integer-only,
         # so hand the caller the SQL-text frame representation its
@@ -542,10 +530,7 @@ def rolling_two_pass(
         # offsets just travel as SQL literals
         w_local = ("expr", keys + [_CHUNK], idx_col, lo, hi)
     out, names = build_exprs(big, w_local)
-    out = out.where(F.col("__tp_ctx") == 0)
-    res = out.select(*df.columns, *names)
-    res.two_pass_stats = raw  # persist-handle convention
-    return res
+    return out.where(F.col("__tp_ctx") == 0).select(*df.columns, *names)
 
 
 def interpolate_two_pass(
@@ -559,7 +544,6 @@ def interpolate_two_pass(
     x: Column,
     rows_per_chunk: int = 2_000_000,
     max_chunks: int = 4096,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Two-pass execution of :func:`~dask_groupby_spark.core.
     groupby_interpolate` — same linear-interpolation semantics, but the
@@ -575,40 +559,21 @@ def interpolate_two_pass(
     NULL/NaN-axis rows are non-anchors (same gate as the window path) and
     bucket to chunk −1 with NULL results for their missing values.
     """
-    _no_tp_collisions(df)
     keys = list(by)
     v = F.col(value)
     anchor = ~missing & x.isNotNull() & ~F.isnan(x.cast("double"))
     idxn = x.cast("double")
-
-    raw = stats if stats is not None else _chunk_stats(df, keys, idxn).persist()
-    nchunks = F.least(
-        F.lit(max_chunks).cast("long"),
-        F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rows_per_chunk))),
+    big = _chunked(
+        df, keys, idxn, rows_per_chunk, max_chunks, sentinel=idxn.isNull() | F.isnan(idxn)
     )
-    # persist sits on the raw aggregate (KB-class; AQE never reuses an
-    # Exchange across consumers) — see scan_two_pass; auto probe slots in
-    stats = raw.withColumn("__tp_c", nchunks).drop("__tp_n")
-    joined = _ns_join(df, stats, keys)
-    chunk = _chunk_of(idxn, sentinel_when=idxn.isNull() | F.isnan(idxn))
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c")
 
-    base = (
-        Window.partitionBy(*keys, _CHUNK)
-        .orderBy(*[F.col(c) for c in order_cols])
-    )
+    base = _local(keys, *[F.col(c) for c in order_cols])
     # forward carries run on the EXACT order reversal with the accumulating
     # frame (unboundedFollowing frames are O(chunk²) in Spark — r8 finding,
     # same fix as the window path)
-    rev = (
-        Window.partitionBy(*keys, _CHUNK)
-        .orderBy(*[F.col(c).desc() for c in order_cols])
-    )
-    wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wr = rev.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    rn_local = F.row_number().over(base)
-    big = big.withColumn("__tp_rnl", rn_local)
+    wb = _upto(base)
+    wr = _upto(_local(keys, *[F.col(c).desc() for c in order_cols]))
+    big = big.withColumn("__tp_rnl", F.row_number().over(base))
 
     # ---- tiny chunk-state table: row count + edge anchors ----------------
     a_struct = F.when(
@@ -619,14 +584,7 @@ def interpolate_two_pass(
         F.max(a_struct).alias("__tp_last_a"),   # rn_local IS the in-chunk order
         F.min(a_struct).alias("__tp_first_a"),
     )
-    w_prec = (
-        Window.partitionBy(*keys).orderBy(F.col(_CHUNK))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_follow = (
-        Window.partitionBy(*keys).orderBy(F.col(_CHUNK).desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w_prec, w_follow = _prior(keys), _prior(keys, desc=True)
     pre_cnt = F.coalesce(F.sum("__tp_cnt").over(w_prec), F.lit(0).cast("long"))
     states = states.withColumn("__tp_pre", pre_cnt).withColumn(
         # globalize the last-anchor row number BEFORE shipping it forward
@@ -690,9 +648,7 @@ def interpolate_two_pass(
         ).otherwise(filled)
     # restore the caller's column order with in-place substitution when
     # out == value (the window path's withColumn semantics)
-    res = _select_with_out(big, df.columns, out, filled)
-    res.two_pass_stats = raw  # persist-handle convention
-    return res
+    return _select_with_out(big, df.columns, out, filled)
 
 
 def _chunk_state_aggs(skip_name: str, ctx, propagating: bool) -> list:
@@ -806,7 +762,6 @@ def rank_two_pass(
     out_name: str,
     rows_per_chunk: int = 2_000_000,
     max_chunks: int = 4096,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Two-pass execution of :func:`~dask_groupby_spark.core.groupby_rank`
     — identical pandas-parity semantics, chunked so one huge group spans
@@ -829,25 +784,13 @@ def rank_two_pass(
         valid = valid & ~F.isnan(v)
     clean = F.when(valid, v)
     vnum = _idx_numeric(df, value)  # raises for non-bucketable value types
-    ord_num = vnum if ascending else -vnum
-
-    # valid-filtered stats (NULL/NaN values never consume a rank); the
-    # auto probe passes the SAME aggregate through (count_col="__tp_nv")
-    raw = (
-        stats
-        if stats is not None
-        else _chunk_stats(df.where(valid), keys, ord_num, "__tp_nv").persist()
+    # pass 0 counts valid rows only (NULL/NaN values never consume a rank)
+    # and keeps that count as pct's denominator; missing values take the
+    # sentinel chunk and a NULL rank below
+    big = _chunked(
+        df, keys, vnum if ascending else -vnum, rows_per_chunk, max_chunks,
+        sentinel=~valid, counted=df.where(valid), count_as="__tp_nv",
     )
-    nchunks = F.least(
-        F.lit(max_chunks).cast("long"),
-        F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_nv") / F.lit(rows_per_chunk))),
-    )
-    stats = raw.withColumn("__tp_c", nchunks)
-
-    joined = _ns_join(df, stats, keys)
-    # missing values never consume a rank: sentinel chunk, NULL rank below
-    chunk = _chunk_of(ord_num, sentinel_when=~valid)
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c")
 
     # ---- tiny per-(group, chunk) states ----------------------------------
     states = (
@@ -858,11 +801,7 @@ def rank_two_pass(
             F.count_distinct(clean).alias("__tp_nd"),
         )
     )
-    w_prec = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(_CHUNK))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w_prec = _prior(keys)
     w_all = Window.partitionBy(*keys)
     offsets = states.select(
         *keys,
@@ -875,22 +814,20 @@ def rank_two_pass(
     # ---- local rank + recombine ------------------------------------------
     big = _ns_join(big, offsets, keys + [_CHUNK])
     order = clean.asc_nulls_last() if ascending else clean.desc_nulls_last()
-    wp = Window.partitionBy(*keys, _CHUNK)
     pre = F.coalesce(F.col("__tp_pre"), F.lit(0).cast("long"))
     if method == "first":
-        w = wp.orderBy(order, F.col(idx_col).asc())
-        rank = F.row_number().over(w) + pre
+        rank = F.row_number().over(_local(keys, order, F.col(idx_col).asc())) + pre
     elif method == "dense":
-        rank = F.dense_rank().over(wp.orderBy(order)) + F.coalesce(
+        rank = F.dense_rank().over(_local(keys, order)) + F.coalesce(
             F.col("__tp_pre_nd"), F.lit(0).cast("long")
         )
     else:
-        min_rank = F.rank().over(wp.orderBy(order)) + pre
+        min_rank = F.rank().over(_local(keys, order)) + pre
         if method == "min":
             rank = min_rank
         else:
             ties = F.count(clean).over(
-                wp.orderBy(order).rangeBetween(Window.currentRow, Window.currentRow)
+                _local(keys, order).rangeBetween(Window.currentRow, Window.currentRow)
             )
             max_rank = min_rank + ties - 1
             rank = max_rank if method == "max" else (min_rank + max_rank) / 2.0
@@ -903,9 +840,7 @@ def rank_two_pass(
         rank = rank.cast("double") / denom
     result_t = "double" if (pct or method == "average") else "long"
     col = F.when(valid, rank.cast(result_t)).otherwise(F.lit(None).cast(result_t))
-    res = _select_with_out(big, df.columns, out_name, col)
-    res.two_pass_stats = raw
-    return res
+    return _select_with_out(big, df.columns, out_name, col)
 
 
 def ewma_two_pass(
@@ -918,7 +853,6 @@ def ewma_two_pass(
     ignore_na: bool,
     out: str,
     rows_per_chunk: int = 100_000,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Two-pass grouped EWMA — pandas ``ewm(alpha).mean()`` parity without
     routing each group to one task (the applyInPandas tier's bound).
@@ -942,8 +876,6 @@ def ewma_two_pass(
     The renormalizing ``adjust=False, ignore_na=False`` mode routes to
     :func:`_ewma_affine_two_pass` (affine-step composition).
     """
-    import math
-
     import pandas as pd
 
     if not (0.0 < alpha < 1.0):
@@ -956,34 +888,15 @@ def ewma_two_pass(
         # recursion (old_wt resets to 1 after every observation) — an
         # AFFINE, not geometric, recurrence across gaps; it has its own
         # two-pass formulation via affine-step composition.
-        return _ewma_affine_two_pass(
-            df, by, value, idx_col, alpha, out, rows_per_chunk, stats=stats
-        )
+        return _ewma_affine_two_pass(df, by, value, idx_col, alpha, out, rows_per_chunk)
     beta = 1.0 - alpha
-    # raise-bound = 280 decimal digits of double headroom; chunks TARGET
-    # half of it, because value-bucketed chunk sizes track idx density and
-    # drift a few percent around the target
-    span_bound = max(16, int(280.0 / max(1e-12, -math.log10(beta))))
-    rpc = min(rows_per_chunk, max(8, span_bound // 2))
-
-    _no_tp_collisions(df)
     keys = list(by)
     v = F.col(value).cast("double")
     valid = v.isNotNull() & ~F.isnan(v)
-    idxn = _idx_numeric(df, idx_col)
+    big, span_bound = _ewma_chunked(df, keys, idx_col, alpha, rows_per_chunk)
 
-    raw = stats if stats is not None else _chunk_stats(df, keys, idxn).persist()
-    # NO max_chunks clamp: the exponent-safety span takes precedence; the
-    # state table grows to n/rpc rows per group, still KB/MB class
-    nchunks = F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rpc)))
-    stats = raw.withColumn("__tp_c", nchunks)
-
-    joined = _ns_join(df, stats, keys)
-    chunk = _chunk_of(idxn, idx_col)
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c", "__tp_n")
-
-    base = Window.partitionBy(*keys, _CHUNK).orderBy(F.col(idx_col))
-    wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    base = _local(keys, F.col(idx_col))
+    wb = _upto(base)
     rl = F.row_number().over(base) - 1          # local row ordinal
     vl = F.count(F.when(valid, 1)).over(wb) - 1  # local valid ordinal (at valid rows)
     el = vl if ignore_na else rl
@@ -1012,11 +925,8 @@ def ewma_two_pass(
         )
     )
 
-    key_schema = ", ".join(
-        f"`{k}` {dict(df.dtypes)[k]}" for k in keys
-    )
     out_schema = (
-        f"{key_schema}, `{_CHUNK}` long, `__tp_R` double, `__tp_Q` double, "
+        f"{_key_schema(df, keys)}, `{_CHUNK}` long, `__tp_R` double, `__tp_Q` double, "
         "`__tp_pre_valid` long, `__tp_y_prev` double"
     )
     adj = bool(adjust)
@@ -1101,9 +1011,28 @@ def ewma_two_pass(
         F.last(y_valid, ignorenulls=True).over(wb),
         F.col("__tp_y_prev"),
     )
-    res = _select_with_out(big, df.columns, out, y.cast("double"))
-    res.two_pass_stats = raw
-    return res
+    return _select_with_out(big, df.columns, out, y.cast("double"))
+
+
+def _ewma_chunked(df: DataFrame, keys: list, idx_col: str, alpha: float, rows_per_chunk: int):
+    """The chunking of both EWMA recurrences: chunks of at most half the
+    exponent-safe span, with no ``max_chunks`` cap — the exponent safety
+    takes precedence, and the state table grows to n/rpc rows per group,
+    still KB/MB class.  Returns (chunked frame, span bound)."""
+    import math
+
+    # raise-bound = 280 decimal digits of double headroom; chunks TARGET
+    # half of it, because value-bucketed chunk sizes track idx density and
+    # drift a few percent around the target
+    span_bound = max(16, int(280.0 / max(1e-12, -math.log10(1.0 - alpha))))
+    rpc = min(rows_per_chunk, max(8, span_bound // 2))
+    return _chunked(df, keys, _idx_numeric(df, idx_col), rpc, None), span_bound
+
+
+def _key_schema(df: DataFrame, keys: list) -> str:
+    """DDL of the group keys, the head of an Arrow recurrence's schema."""
+    types = dict(df.dtypes)
+    return ", ".join(f"`{k}` {types[k]}" for k in keys)
 
 
 def sessionize_two_pass(
@@ -1115,7 +1044,6 @@ def sessionize_two_pass(
     ts_expr,
     rows_per_chunk: int = 2_000_000,
     max_chunks: int = 4096,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Two-pass sessionization — same lag → boundary → running-sum
     semantics as :func:`~dask_groupby_spark.operators.selection.sessionize`,
@@ -1129,21 +1057,12 @@ def sessionize_two_pass(
     all SQL, no Arrow step.  NULL timestamps ride the sentinel chunk with
     the window path's exact (per-row new-session) semantics.
     """
-    _no_tp_collisions(df)
     keys = list(by)
     ts = ts_expr
-    raw = stats if stats is not None else _chunk_stats(df, keys, ts).persist()
-    nchunks = F.least(
-        F.lit(max_chunks).cast("long"),
-        F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rows_per_chunk))),
-    )
-    stats = raw.withColumn("__tp_c", nchunks).drop("__tp_n")
-    joined = _ns_join(df, stats, keys)
-    chunk = _chunk_of(ts, sentinel_when=ts.isNull())
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c")
+    big = _chunked(df, keys, ts, rows_per_chunk, max_chunks)
 
-    base = Window.partitionBy(*keys, _CHUNK).orderBy(F.col(ts_col).asc())
-    wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    base = _local(keys, F.col(ts_col).asc())
+    wb = _upto(base)
     # materialize the lag/row_number BEFORE aggregating (window functions
     # cannot appear inside aggregate expressions)
     big = big.withColumn("__tp_lp", F.lag(ts).over(base)).withColumn(
@@ -1175,10 +1094,9 @@ def sessionize_two_pass(
         prev_last.alias("__tp_prev_last"),
         (F.col("__tp_ib") + first_b).alias("__tp_total"),
     )
-    w_prec = w_ord.rowsBetween(Window.unboundedPreceding, -1)
     offsets = st2.select(
         *keys, _CHUNK, "__tp_prev_last",
-        F.coalesce(F.sum("__tp_total").over(w_prec), F.lit(0).cast("long")).alias("__tp_pre"),
+        F.coalesce(F.sum("__tp_total").over(_prior(keys)), F.lit(0).cast("long")).alias("__tp_pre"),
     )
 
     big = _ns_join(big, offsets, keys + [_CHUNK])
@@ -1189,9 +1107,7 @@ def sessionize_two_pass(
         + F.coalesce(F.col("__tp_pre"), F.lit(0).cast("long"))
         - 1
     ).cast("bigint")
-    res = _select_with_out(big, df.columns, out, session)
-    res.two_pass_stats = raw
-    return res
+    return _select_with_out(big, df.columns, out, session)
 
 
 def _ewma_affine_two_pass(
@@ -1202,7 +1118,6 @@ def _ewma_affine_two_pass(
     alpha: float,
     out: str,
     rows_per_chunk: int,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """pandas ``adjust=False, ignore_na=False`` EWMA, two-pass.
 
@@ -1221,30 +1136,16 @@ def _ewma_affine_two_pass(
     POSITIVE powers only — a huge gap underflows to the mathematically
     correct limit ``y → x``.
     """
-    import math
-
     import pandas as pd
 
     beta = 1.0 - alpha
-    # raise-bound vs half-target: see ewma_two_pass
-    span_bound = max(16, int(280.0 / max(1e-12, -math.log10(max(beta, 1e-300)))))
-    rpc = min(rows_per_chunk, max(8, span_bound // 2))
-
-    _no_tp_collisions(df)
     keys = list(by)
     v = F.col(value).cast("double")
     valid = v.isNotNull() & ~F.isnan(v)
-    idxn = _idx_numeric(df, idx_col)
+    big, span_bound = _ewma_chunked(df, keys, idx_col, alpha, rows_per_chunk)
 
-    raw = stats if stats is not None else _chunk_stats(df, keys, idxn).persist()
-    nchunks = F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rpc)))
-    stats = raw.withColumn("__tp_c", nchunks).drop("__tp_n")
-    joined = _ns_join(df, stats, keys)
-    chunk = _chunk_of(idxn, idx_col)
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c")
-
-    base = Window.partitionBy(*keys, _CHUNK).orderBy(F.col(idx_col))
-    wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    base = _local(keys, F.col(idx_col))
+    wb = _upto(base)
     wprev = base.rowsBetween(Window.unboundedPreceding, -1)
     big = big.withColumn("__tp_rl", F.row_number().over(base) - 1)
     big = big.withColumn(
@@ -1285,9 +1186,8 @@ def _ewma_affine_two_pass(
         ))).alias("__tp_lastc"),
     )
 
-    key_schema = ", ".join(f"`{k}` {dict(df.dtypes)[k]}" for k in keys)
     out_schema = (
-        f"{key_schema}, `{_CHUNK}` long, `__tp_y0` double, "
+        f"{_key_schema(df, keys)}, `{_CHUNK}` long, `__tp_y0` double, "
         "`__tp_plo` double, `__tp_prer` long, `__tp_prev` long"
     )
     a_, b_, sb_ = float(alpha), float(beta), span_bound
@@ -1342,6 +1242,4 @@ def _ewma_affine_two_pass(
     y = F.coalesce(
         F.last(F.col("__tp_y"), ignorenulls=True).over(wb), F.col("__tp_y0")
     )
-    res = _select_with_out(big, df.columns, out, y.cast("double"))
-    res.two_pass_stats = raw
-    return res
+    return _select_with_out(big, df.columns, out, y.cast("double"))

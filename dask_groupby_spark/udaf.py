@@ -246,16 +246,12 @@ def ewma(
     recurrence evaluated over the TINY chunk-state table (see
     :func:`dask_groupby_spark.two_pass.ewma_two_pass`); identical pandas
     semantics in all four adjust×ignore_na modes, max task = one chunk.
-    ``method="auto"`` (DEFAULT): per-group row-count probe (= two_pass's
-    pass-0 aggregate, passed through — free on the scale path) picks
-    two_pass when some group exceeds ``rows_per_chunk`` rows and the
-    recurrence is two-pass-able (0 < alpha < 1, numeric/time idx);
-    otherwise the pandas tier.
+    ``method="auto"`` (DEFAULT): picks two_pass when some group exceeds
+    ``rows_per_chunk`` rows and the recurrence is two-pass-able
+    (0 < alpha < 1, numeric/time idx); otherwise the pandas tier.  The
+    first call probes per-group row counts once, the memo serves
+    repeated calls, and nothing is persisted.
     """
-    if method not in ("pandas", "two_pass", "auto"):
-        raise ValueError(
-            f"method must be 'pandas', 'two_pass', or 'auto', got {method!r}"
-        )
     # A NULL idx has no position in an order-dependent recurrence: exclude
     # the row from the series and give it a NULL result, UNIFORMLY —
     # enforced here, before tier dispatch, because the tiers used to
@@ -268,36 +264,17 @@ def ewma(
         out, F.lit(None).cast("double")
     )
     work = df.where(F.col(idx_col).isNotNull())
-    pre_stats = None
-    if method == "auto":
-        from .two_pass import _idx_numeric, dispatch_auto
+    from .two_pass import choose_tier
 
-        eligible = 0.0 < alpha < 1.0
-        idxn = None
-        if eligible:
-            try:
-                idxn = _idx_numeric(work, idx_col)
-            except ValueError:
-                eligible = False
-        if eligible:
-            tier, pre_stats = dispatch_auto(
-                work, list(by), idxn, rows_per_chunk
-            )
-            method = "two_pass" if tier == "two_pass" else "pandas"
-        else:
-            method = "pandas"
-    if method == "two_pass":
+    axis = idx_col if 0.0 < alpha < 1.0 else None
+    if choose_tier(method, work, list(by), axis, rows_per_chunk, fallback="pandas") == "two_pass":
         from .two_pass import ewma_two_pass
 
         res = ewma_two_pass(
             work, by, value, idx_col, alpha, adjust, ignore_na, out,
-            rows_per_chunk=rows_per_chunk, stats=pre_stats,
+            rows_per_chunk=rows_per_chunk,
         )
-        final = res.unionByName(null_idx)
-        # re-attach the persist handle the union wrapper would otherwise
-        # discard (two_pass.py handle convention; r9 meta-review)
-        final.two_pass_stats = res.two_pass_stats
-        return final
+        return res.unionByName(null_idx)
 
     def _t(vals: pd.DataFrame) -> dict:
         return {

@@ -182,6 +182,28 @@ def build_queries(spark):
             dense=True, fill_value=0.0,
         )
 
+    def scan_two_pass():
+        """Auto scan over few groups that each exceed rows_per_chunk: the
+        tier decision picks the chunked two-pass plan (the perfbench
+        ``band_ffill`` shape)."""
+        from dask_groupby_spark import groupby_scan
+
+        return groupby_scan(
+            li, "l_returnflag", func="ffill", value="l_extendedprice",
+            idx_col="l_orderkey", rows_per_chunk=5_000,
+        )
+
+    def scan_auto_window():
+        """Auto scan whose input the parquet footers bound below
+        rows_per_chunk: the plain window, picked without a job (the
+        perfbench ``cell_nancumsum`` shape)."""
+        from dask_groupby_spark import groupby_scan
+
+        return groupby_scan(
+            li, "l_suppkey", func="nancumsum", value="l_extendedprice",
+            idx_col="l_orderkey",
+        )
+
     return {
         "dedup_minhash": dedup_minhash,
         "near_dedup": near_dedup,
@@ -198,6 +220,8 @@ def build_queries(spark):
         "tfidf": tfidf,
         "grid_2key": grid_2key,
         "resample_dense_keys": resample_dense_keys,
+        "scan_two_pass": scan_two_pass,
+        "scan_auto_window": scan_auto_window,
     }
 
 

@@ -840,6 +840,12 @@ def test_two_key_grid_plan_one_scan_two_exchanges(li):
     assert "SinglePartition" in plan, plan
     for absent in ("BroadcastNestedLoopJoin", "LogicalRDD", "ExistingRDD", "rangepartitioning"):
         assert absent not in plan, plan
+    # the merge window is partitioned by the grid keys: a window without a
+    # partition spec logs "No Partition Defined for Window operation!"
+    win = _re.search(
+        r"^\(\d+\) Window\n.*\nArguments: .*\], \[([^\[\]]*)\], \[[^\[\]]*\]$", plan, _re.M
+    )
+    assert win and "l_returnflag" in win.group(1) and "l_linestatus" in win.group(1), plan
     keys = [(r["l_returnflag"], r["l_linestatus"]) for r in out.collect()]
     assert keys == sorted(keys)
 

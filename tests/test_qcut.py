@@ -201,26 +201,27 @@ def test_qcut_auto_skips_probe_on_boundable_frame(spark, tmp_path):
     ).write.parquet(p)
     df = spark.read.parquet(p)
 
-    # binning resolves _metadata_row_bound from plans at call time —
-    # spy there; a bound of 500 <= rows_per_chunk is the zero-job
-    # short-circuit condition
-    from dask_groupby_spark import plans as pl
+    # the tier decision (groupby_rank's, through two_pass.dispatch_auto)
+    # resolves _metadata_row_bound from the two_pass module — spy there;
+    # a bound of 500 <= rows_per_chunk is the zero-job short-circuit
+    # condition
+    from dask_groupby_spark import two_pass as tp
 
     calls = []
-    orig = pl._metadata_row_bound
+    orig = tp._metadata_row_bound
 
     def spy(frame, *a, **k):
         r = orig(frame, *a, **k)
         calls.append(r)
         return r
 
-    pl._metadata_row_bound = spy
+    tp._metadata_row_bound = spy
     try:
         auto = quantile_bins(df, "v", q=4, by="g", out="qb")
         rows_auto = sorted((r["id"], r["qb"]) for r in auto.collect())
         assert calls and calls[-1] == 500  # bound found -> no probe job
     finally:
-        pl._metadata_row_bound = orig
+        tp._metadata_row_bound = orig
     forced = quantile_bins(df, "v", q=4, by="g", out="qb", method="two_pass")
     rows_forced = sorted((r["id"], r["qb"]) for r in forced.collect())
     assert rows_auto == rows_forced

@@ -844,22 +844,47 @@ def test_auto_default_everywhere(spark):
     assert qs == qb
 
 
-def test_auto_probe_free_on_scale_path(spark):
-    """When auto picks two_pass, the probe's persisted stats frame is the
-    plan's pass-0 table — scan_two_pass must not re-aggregate it (the
-    returned handle IS the probe frame, already materialized)."""
-    rows = [(i, i % 2, float(i)) for i in range(100)]
-    df = spark.createDataFrame(rows, "idx bigint, k bigint, v double")
-    out = groupby_scan(
-        df, "k", func="cumsum", value="v", idx_col="idx",
-        method="auto", rows_per_chunk=10,
-    )
-    assert "__tp_chunk" in _plan(out)
-    stats = out.two_pass_stats
-    # probe already materialized the cache: 100% cached immediately
-    info = stats._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" in info
-    stats.unpersist()
+def test_auto_two_pass_leaves_no_persisted_rdd(spark):
+    """No auto two-pass call leaves a persisted RDD in the session: each
+    plan computes its pass 0 inside its own query.  Every op gets its own
+    frame, so no call can find its stats aggregate already cached by an
+    earlier one."""
+    from dask_groupby_spark import groupby_interpolate, groupby_rank
+    from dask_groupby_spark.operators.selection import sessionize
+    from dask_groupby_spark.rolling import groupby_rolling
+    from dask_groupby_spark.udaf import ewma
+
+    def frame(seed):
+        rng = np.random.default_rng(SEED + 100 + seed)
+        rows = [
+            (i, i % 2, float(rng.random()) if rng.random() > 0.2 else float("nan"))
+            for i in range(200)
+        ]
+        return spark.createDataFrame(rows, "idx bigint, k bigint, v double")
+
+    ops = {
+        "scan": lambda df: groupby_scan(
+            df, "k", func="cumsum", value="v", idx_col="idx", rows_per_chunk=10),
+        "rank": lambda df: groupby_rank(df, "k", value="v", rows_per_chunk=10),
+        "interpolate": lambda df: groupby_interpolate(
+            df, "k", value="v", order_by="idx", out="fv", rows_per_chunk=10),
+        "rolling": lambda df: groupby_rolling(
+            df, "k", funcs="mean", value="v", idx_col="idx", window=5,
+            range_between=(-4, 0), rows_per_chunk=10),
+        "ewma": lambda df: ewma(df, "k", value="v", idx_col="idx", alpha=0.5, rows_per_chunk=10),
+        "sessionize": lambda df: sessionize(df, "k", ts_col="idx", gap=3.0, rows_per_chunk=10),
+    }
+    def persisted():
+        # ids, not a count: the context cleaner may unpersist RDDs that
+        # earlier tests left behind while a call runs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    for seed, (name, op) in enumerate(ops.items()):
+        before = persisted()
+        out = op(frame(seed))
+        assert "__tp_chunk" in _plan(out), name
+        out.collect()
+        assert not persisted() - before, name
 
 
 def test_rolling_float_and_fractional_range_bounds(spark):
@@ -1102,26 +1127,21 @@ def test_dispatch_auto_probe_economics(spark, tmp_path):
     tp._chunk_stats = spy
     try:
         # footer short-circuit: window tier, zero probe jobs
-        tier, stats = tp.dispatch_auto(df, ["k"], idxn, 2_000_000)
-        assert (tier, stats) == ("window", None) and not calls
+        assert tp.dispatch_auto(df, ["k"], idxn, 2_000_000) == "window" and not calls
         # un-boundable frame: probe runs once, memo absorbs the repeat
         j = df.join(df.select("id"), on="id")
         jidx = tp._idx_numeric(j, "id")
-        tier, stats = tp.dispatch_auto(j, ["k"], jidx, 2_000_000)
-        assert (tier, stats) == ("window", None) and len(calls) == 1
-        tier, stats = tp.dispatch_auto(j, ["k"], jidx, 2_000_000)
-        assert (tier, stats) == ("window", None) and len(calls) == 1
-        # memo stores the observed max group size: a tighter
-        # rows_per_chunk on the same frame must NOT reuse the window
-        # decision blindly — it re-probes and flips to two_pass
-        tier, stats = tp.dispatch_auto(j, ["k"], jidx, 10)
-        assert tier == "two_pass" and stats is not None
-        stats.unpersist()
+        assert tp.dispatch_auto(j, ["k"], jidx, 2_000_000) == "window" and len(calls) == 1
+        assert tp.dispatch_auto(j, ["k"], jidx, 2_000_000) == "window" and len(calls) == 1
+        # the memo stores the observed max group size, so a tighter
+        # rows_per_chunk on the same frame flips to two_pass without a
+        # second probe
+        assert tp.dispatch_auto(j, ["k"], jidx, 10) == "two_pass" and len(calls) == 1
         # small rows_per_chunk on the boundable frame: bound exceeds the
         # chunk size, so the probe runs and picks the scale tier
-        tier, stats = tp.dispatch_auto(df, ["k"], idxn, 10)
-        assert tier == "two_pass" and stats is not None
-        stats.unpersist()
+        assert tp.dispatch_auto(df, ["k"], idxn, 10) == "two_pass" and len(calls) == 2
+        # a repeated call deciding two_pass runs no probe
+        assert tp.dispatch_auto(df, ["k"], idxn, 10) == "two_pass" and len(calls) == 2
     finally:
         tp._chunk_stats = orig
 
@@ -1200,5 +1220,4 @@ def test_dispatch_auto_bound_conservative_on_empty_relation(spark, tmp_path):
     df = spark.read.parquet(p)
     b = tp._metadata_row_bound(df)
     assert b == 0
-    tier, stats = tp.dispatch_auto(df, ["k"], tp._idx_numeric(df, "id"), 100)
-    assert (tier, stats) == ("window", None)
+    assert tp.dispatch_auto(df, ["k"], tp._idx_numeric(df, "id"), 100) == "window"
