@@ -742,6 +742,53 @@ def simhash(
     return agg.select("id", sig.cast("bigint").alias("simhash"))
 
 
+def _union_find(pdf):
+    """Union-find over an edge frame's ``src``/``dst`` columns: one
+    ``(id, cluster)`` row per vertex, ``cluster`` its component minimum
+    (union by min keeps each root the minimum, so labels equal the
+    distributed min-label result exactly).  Direction and repeated edges
+    are irrelevant."""
+    import pandas as pd
+
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+        parent.setdefault(s, s)
+        parent.setdefault(d, d)
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            if rd < rs:
+                rs, rd = rd, rs
+            parent[rd] = rs
+    verts = list(parent)
+    return pd.DataFrame({"id": verts, "cluster": [find(v) for v in verts]})
+
+
+def _collected_union_find(edges: DataFrame) -> DataFrame:
+    """Collect a persisted ``src``/``dst`` edge list, release it, and
+    union-find it on the driver: the result is a local relation, so
+    nothing stays pinned for the caller's action."""
+    dtype = edges.schema["src"].dataType
+    pdf = edges.toPandas()  # Arrow batch transfer, not Py4J rows
+    edges.unpersist()
+    return edges.sparkSession.createDataFrame(_union_find(pdf), _uf_schema(dtype))
+
+
+def _uf_schema(dtype) -> T.StructType:
+    return T.StructType([T.StructField("id", dtype), T.StructField("cluster", dtype)])
+
+
+_MAX_DRIVER_EDGES = 2_000_000
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -749,48 +796,84 @@ def duplicate_clusters(
     max_iter: int = 20,
     out_id: str = "id",
     out_cluster: str = "cluster_id",
-    max_driver_edges: int | None = 2_000_000,
+    max_driver_edges: int | None = _MAX_DRIVER_EDGES,
 ) -> DataFrame:
     """Transitive duplicate clusters from a candidate-pair edge list
-    (LSH/Jaccard/embedding near-dup output): connected components by
-    min-label propagation — every member of a component gets the
-    component's minimum id as ``cluster_id``.
+    (LSH/Jaccard/embedding near-dup output): connected components —
+    every member of a component gets the component's minimum id as
+    ``cluster_id``.
 
     The step near-dup *pipelines* actually need after candidate pairs:
     A~B and B~C must collapse to ONE keeper even though (A, C) was never
     emitted as a pair.
 
-    Two tiers, both exact and identical in output (the BPE-style
-    thresholded split — ``bpe.py``'s driver-loop precedent):
+    Three tiers, all exact and identical in output.  ``max_driver_edges``
+    (default 2M) caps the symmetrized edges one union-find may hold:
 
-    - **small subgraph** (symmetrized edge count ≤ ``max_driver_edges``,
-      default 2M ≈ tens of MB): union-find on the driver — O(E·α) with
-      ZERO per-round shuffles.  The LSH filter's whole point is that the
-      pair graph is a sliver of the corpus, so this is the common case
-      even at large SFs, and it removes ~10 s of per-round job overhead
-      (persist + checkpoint + convergence aggregate × rounds) that
-      dominates when the graph is small.  A bounded, documented collect
-      (the KB/MB class); pass ``max_driver_edges=None/0`` to force the
-      distributed path.
-    - **at scale** (r13): ONE star-contraction pass first — m(v) =
+    - **bounded** (a driver-side row bound on ``pairs``,
+      :func:`~dask_groupby_spark.plans._metadata_row_bound` — parquet
+      footers / cached-relation / local-relation stats, no Spark job —
+      with 2 × bound ≤ ``max_driver_edges``): one union-find over the
+      non-null pairs in ONE task, a constant-key grouped
+      ``applyInPandas``.  Lazy: building runs no job and persists
+      nothing; the caller's action runs the whole pipeline.
+    - **small** (no such bound, symmetrized edge count ≤
+      ``max_driver_edges``): the edges are counted and collected at build
+      and the same union-find runs on the driver (Arrow both ways,
+      nothing left persisted).
+    - **at scale**: ONE star-contraction pass first — m(v) =
       min(v ∪ neighbors(v)) via a map-combined groupBy, every edge
       mapped to (m(src), m(dst)), self-loops dropped.  Components are
-      preserved exactly and each component's minimum survives as its own
-      m-vertex, so labels computed on the contracted graph compose back
-      as final(v) = final'(m(v)).  Dup graphs are unions of band-bucket
-      cliques/stars, so contraction typically removes ~95%+ of the
-      edges; if the contracted set fits ``max_driver_edges`` the driver
-      union-find finishes with ZERO further shuffles, else the standard
-      min-label propagation loop (each round one join + one groupBy,
-      two hops per materialization, type-agnostic changed-count
-      convergence, localCheckpoint lineage cuts) runs over the
-      contracted — never larger — edge list.
+      preserved exactly and each component's minimum survives as its
+      own m-vertex, so labels computed on the contracted graph compose
+      back as final(v) = final'(m(v)).  Dup graphs are unions of
+      band-bucket cliques/stars, so contraction typically removes ~95%+
+      of the edges; if the contracted set counts ≤ ``max_driver_edges``
+      it is collected into the same union-find, else the min-label
+      propagation loop (each round one join + one groupBy, two hops per
+      materialization, type-agnostic changed-count convergence,
+      localCheckpoint lineage cuts) runs over the contracted — never
+      larger — edge list.
+
+    ``max_driver_edges=None/0`` forces contraction and the min-label
+    loop.
 
     Output: one row per vertex appearing in ``pairs`` — (out_id,
     out_cluster).  Singleton documents (no pair) are their own cluster by
     definition and are simply absent here.
     """
+    from ..plans import _metadata_row_bound
+
+    bound = _metadata_row_bound(pairs, limit=max_driver_edges // 2) if max_driver_edges else None
+    return _clusters(pairs, id_a, id_b, max_iter, max_driver_edges, bound).select(
+        F.col("id").alias(out_id), F.col("cluster").alias(out_cluster)
+    )
+
+
+def _clusters(
+    pairs: DataFrame,
+    id_a: str,
+    id_b: str,
+    max_iter: int,
+    max_driver_edges: int | None,
+    edge_bound: int | None,
+) -> DataFrame:
+    """:func:`duplicate_clusters`' body, returning ``(id, cluster)``;
+    ``edge_bound`` is an upper bound on ``pairs``' rows (None when
+    unknown) that picks the tier.  ``max_driver_edges`` counts
+    symmetrized edges, two per pair."""
     a, b = F.col(id_a), F.col(id_b)
+    if max_driver_edges and edge_bound is not None and 2 * edge_bound <= max_driver_edges:
+        # F.array coerces both endpoints to their COMMON wider type (int vs
+        # bigint id columns label every vertex in one type); NULL endpoints
+        # carry no identity to cluster on, so their pairs are dropped
+        e = F.array(a, b)
+        edges = pairs.where(a.isNotNull() & b.isNotNull()).select(
+            e[0].alias("src"), e[1].alias("dst")
+        )
+        return edges.groupBy(F.lit("all")).applyInPandas(  # an int literal is an ordinal
+            _union_find, _uf_schema(edges.schema["src"].dataType)
+        )
     edges = (
         # symmetrize with a map-side explode, NOT pairs ∪ pairs.flipped:
         # a union re-executes the caller's (unpersisted) pair pipeline once
@@ -807,81 +890,21 @@ def duplicate_clusters(
             ).alias("__e")
         )
         .select(F.col("__e.src").alias("src"), F.col("__e.dst").alias("dst"))
-        # NULL endpoints carry no identity to cluster on: drop the edge
-        # (uniform across BOTH tiers — previously the distributed joins
-        # silently never matched them while the driver tier would have
-        # NaN-poisoned its Arrow int columns)
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
         .persist()
     )
-    # Size the per-round parallelism to the SUBGRAPH, not the session
-    # default: a 32-partition shuffle per round on a small component graph
-    # is pure task-scheduling overhead (measured 30-40% of near_dedup
-    # wall-clock at sf0.1).  The count also materializes the persist that
-    # every round reuses.  ~1M edges per partition keeps tasks comfortably
-    # in memory; a billion-edge subgraph at 100 TB still fans out to
-    # ~1000 tasks.
+    # Without a bound the edges are counted (this also fills the persist
+    # that contraction reuses) and a small list is collected: the
+    # contraction below pins m, a localCheckpoint, in the returned frame.
     n_edges = edges.count()
     if max_driver_edges and n_edges <= max_driver_edges:
-        import pandas as pd
-
-        pdf = edges.toPandas()  # Arrow batch transfer, not Py4J rows
-        edges.unpersist()
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-            parent.setdefault(s, s)
-            parent.setdefault(d, d)
-            rs, rd = find(s), find(d)
-            if rs != rd:
-                # union by min keeps the root the component minimum, so
-                # labels match the distributed min-label result exactly
-                if rd < rs:
-                    rs, rd = rd, rs
-                parent[rd] = rs
-        verts = list(parent)
-        # the explode's F.array(struct(a,b), struct(b,a)) coerced src/dst to
-        # their COMMON wider type — use it for both output columns, exactly
-        # like the distributed tier's union-unified label type (r7 review:
-        # pairs.schema[id_a] alone mistyped id_b-only vertices when the two
-        # id columns differed, e.g. int vs bigint)
-        dtype = edges.schema["src"].dataType
-        schema = T.StructType(
-            [T.StructField(out_id, dtype), T.StructField(out_cluster, dtype)]
-        )
-        out_pdf = pd.DataFrame(
-            {out_id: verts, out_cluster: [find(v) for v in verts]}
-        )
-        return pairs.sparkSession.createDataFrame(out_pdf, schema)
-    # ------------------------------------------------------------------
-    # r13: ONE star-contraction pass before any label-propagation round
-    # (guide §2.3 "shuffle fewer bytes" — VERDICT r12 #1: the clustering
-    # slice was 15.7 s of near_dedup's 19.3 s at sf10 because every
-    # round re-shuffled the FULL multi-million-row edge list).
-    #
-    # m(v) = min(v ∪ neighbors(v)) — one map-combined groupBy over the
-    # symmetrized edges.  Mapping both endpoints of every edge through m
-    # and dropping self-loops contracts each dense near-dup clique/star
-    # to (almost) nothing, EXACTLY preserving components: m only merges
-    # vertices already connected, and the component minimum w satisfies
-    # m(w) = w (all its neighbors are ≥ the component min), so w
-    # survives contraction and min-labels computed on the contracted
-    # graph ARE the original component minima; final(v) = final'(m(v)).
-    # Dup graphs are unions of band-bucket cliques/stars, so the
-    # contracted edge set is typically a few % of E — usually small
-    # enough for the driver union-find tier, which skips every per-round
-    # shuffle.  Pathological long chains merely fall through to the
-    # min-label loop over the contracted (never larger) edge set.
-    # ------------------------------------------------------------------
+        return _collected_union_find(edges)
+    # star contraction (r13: every propagation round re-shuffled the FULL
+    # edge list, 15.7 s of near_dedup's 19.3 s at sf10).  m only merges
+    # vertices already connected, and the component minimum w has
+    # m(w) = w, so w survives and min-labels on the contracted graph ARE
+    # the original component minima.
     m = (
         edges.groupBy("src")
         .agg(F.least(F.min("dst"), F.col("src")).alias("mlbl"))
@@ -906,56 +929,23 @@ def duplicate_clusters(
     edges.unpersist()
 
     def _finalize(root_lbls: DataFrame | None) -> DataFrame:
-        """out(v) = root(m(v)); m-values whose whole component collapsed
-        into them carry no contracted edge and keep label m(v)."""
+        """out(v) = root(m(v)) from (vertex, label) roots; m-values whose
+        whole component collapsed into them carry no contracted edge and
+        keep label m(v)."""
         if root_lbls is None:
-            return m.select(
-                F.col("mv").alias(out_id), F.col("mlbl").alias(out_cluster)
-            )
-        r = root_lbls.select(
-            F.col("v").alias("__rv"), F.col("lbl").alias("__rlbl")
-        )
+            return m.select(F.col("mv").alias("id"), F.col("mlbl").alias("cluster"))
+        r = root_lbls.toDF("__rv", "__rlbl")
         return m.join(r, m.mlbl == F.col("__rv"), "left").select(
-            F.col("mv").alias(out_id),
-            F.coalesce(F.col("__rlbl"), F.col("mlbl")).alias(out_cluster),
+            F.col("mv").alias("id"),
+            F.coalesce(F.col("__rlbl"), F.col("mlbl")).alias("cluster"),
         )
 
     if n_c == 0:
         return _finalize(None)
     if max_driver_edges and n_c <= max_driver_edges:
-        import pandas as pd
-
-        pdf = contracted.toPandas()
-        contracted.unpersist()
-        parent = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-            parent.setdefault(s, s)
-            parent.setdefault(d, d)
-            rs, rd = find(s), find(d)
-            if rs != rd:
-                if rd < rs:
-                    rs, rd = rd, rs
-                parent[rd] = rs
-        verts = list(parent)
-        schema = T.StructType(
-            [
-                T.StructField("v", m.schema["mlbl"].dataType),
-                T.StructField("lbl", m.schema["mlbl"].dataType),
-            ]
-        )
-        roots = pairs.sparkSession.createDataFrame(
-            pd.DataFrame({"v": verts, "lbl": [find(v) for v in verts]}), schema
-        )
-        return _finalize(roots)
+        return _finalize(_collected_union_find(contracted))
+    # per-round parallelism sized to the subgraph (~1M edges/partition): a
+    # session-default shuffle per round on a small graph is pure overhead
     p = max(1, min(contracted.rdd.getNumPartitions(), n_c // 1_000_000 + 1))
     # keep the handle to the PERSISTED frame: rebinding `edges` to the
     # repartitioned child made the tail unpersist a no-op and leaked the
@@ -1053,46 +1043,43 @@ def near_deduplicate(
     want, since the arbitrary min-id member may be the truncated copy.
     Costs one extra join + window over the (tiny) cluster table only.
     """
-    if spill_threshold is not None and max_bucket_size is not None:
-        # r11 (VERDICT r10 item #7): a band bucket holds at most one row
-        # per document, so a driver-only metadata bound on the CORPUS
-        # frame (parquet footers / cached-relation stats; the band-explode
-        # hides the generic per-rows bound inside sorted_bucket_pairs)
-        # proving |docs| <= spill_threshold proves no bucket can spill —
-        # drop the spill machinery entirely and run the plain r9-shaped
-        # plan, zero extra jobs or shuffles, bit-identical output.
-        # Corpora too large to bound this way (or non-file frames) keep
-        # the default-ON guard.
-        from ..plans import _metadata_row_bound
+    from ..plans import _metadata_row_bound
 
-        corpus_bound = _metadata_row_bound(df, limit=spill_threshold)
-        if corpus_bound is not None and corpus_bound <= spill_threshold:
-            spill_threshold = None
     sig = minhash_signatures(
         df, id_col, text_col, num_hashes=num_hashes, shingle_k=shingle_k, hasher=hasher
     )
-    # r13 (guide §2.3): clustering needs CONNECTIVITY, not the clique —
-    # enumerate each band bucket's spanning STAR (min member → every other
-    # member; exactly the anchor-star cap at 1) instead of the full
-    # O(|bucket|²) pair clique.  Per bucket the star and the clique connect
-    # the same member set, and the capped plan above the cap IS the anchor
-    # star already, so clusters — and therefore survivors — are identical
-    # for every (max_bucket_size, spill_threshold) setting, while the edge
-    # list entering `duplicate_clusters` shrinks from Σ s(s-1)/2 to
-    # Σ (s-1) rows and the per-pair dedup groupBy disappears.  Callers who
-    # want the actual pair list (`lsh_candidate_pairs`) are unaffected.
+    # each band bucket's spanning STAR (the anchor-star cap at 1, see the
+    # docstring): the clique's connectivity in Σ (s-1) edges, not Σ s(s-1)/2
     exploded = _band_rows(sig, num_hashes, bands, hasher)
+    # One driver-only metadata bound on the CORPUS frame (parquet footers
+    # / cached-relation stats; the band-explode hides the generic per-rows
+    # bound) serves both caps.  A band bucket holds at most one row per
+    # document, so |docs| <= spill_threshold proves no bucket can spill
+    # (r11): drop the spill machinery, bit-identical output.  And each
+    # document is a non-anchor star member of at most one bucket per band,
+    # so the star has at most bands·|docs| rows, twice that symmetrized:
+    # within max_driver_edges it clusters lazily in one task.
+    if max_bucket_size is None:
+        spill_threshold = None
+    corpus_bound = _metadata_row_bound(
+        df, limit=max(_MAX_DRIVER_EDGES // (2 * bands), spill_threshold or 0)
+    )
+    if corpus_bound is not None and spill_threshold is not None and corpus_bound <= spill_threshold:
+        spill_threshold = None
     star = sorted_bucket_pairs(
         exploded,
         ["band", "bh"],
         F.col("id"),
         lambda a, b: F.struct(a.alias("a"), b.alias("b")),
         max_bucket_size=1,
-        spill_threshold=spill_threshold if max_bucket_size is not None else None,
+        spill_threshold=spill_threshold,
     ).select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
-    clusters = duplicate_clusters(star, max_iter=max_iter)
+    clusters = _clusters(
+        star, "id_a", "id_b", max_iter, _MAX_DRIVER_EDGES,
+        None if corpus_bound is None else bands * corpus_bound,
+    )
     if keep_by is None:
-        losers = clusters.where(F.col("id") != F.col("cluster_id")).select(
+        losers = clusters.where(F.col("id") != F.col("cluster")).select(
             F.col("id").alias(id_col)
         )
     else:
@@ -1101,7 +1088,7 @@ def near_deduplicate(
         qual = df.select(
             F.col(id_col).alias("id"), F.col(keep_by).alias("__q")
         )
-        w = Window.partitionBy("cluster_id").orderBy(
+        w = Window.partitionBy("cluster").orderBy(
             # NaN sorts ABOVE every double in Spark: without the NaN->NULL
             # guard a NaN-quality member would outrank every real score and
             # become the cluster keeper (r9 review)

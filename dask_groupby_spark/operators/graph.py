@@ -199,12 +199,16 @@ def connected_components(
 ) -> DataFrame:
     """Connected components of an undirected graph: ``(id, component)``
     with each component labeled by its minimum member id — the general
-    public face of the two-tier engine that
+    public face of the engine that
     :func:`~dask_groupby_spark.operators.dedup.duplicate_clusters` runs
-    over near-dup candidate pairs (driver union-find up to
-    ``max_driver_edges`` symmetrized edges, min-label propagation with
-    a type-agnostic changed-label convergence check and localCheckpoint cuts
-    beyond; see its docstring for the scale analysis).
+    over near-dup candidate pairs.  ``max_driver_edges`` caps the
+    symmetrized edges one union-find holds: when a driver-side metadata
+    bound proves ``edges`` fits it, one lazy union-find runs in a single
+    task; without a bound, a counted edge list that fits it is collected
+    into a driver union-find; otherwise a star-contraction pass shrinks
+    the graph first, then a driver union-find (contracted edges up to
+    ``max_driver_edges``) or min-label propagation finishes it.  See its
+    docstring for the scale analysis.
 
     Edge direction is ignored (the edge list is symmetrized).  Nodes
     with no edges are absent — they are their own singleton component

@@ -1,22 +1,19 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
-Decode strategy, three tiers (checked in order per payload):
+Decode strategy, two tiers (checked in order per payload), both
+dependency-free so no installed package can change an output:
 
-1. **Real libraries when installed** — PIL for full image decode (pixel
-   stats), soundfile for non-WAV audio.  Probed once at import; this
-   container ships neither, but the code path is live the moment they
-   appear on the PYTHONPATH.
-2. **Dependency-free header parsing** — PNG IHDR, JPEG SOFn, GIF, BMP
-   dimension extraction and RIFF/WAVE PCM decoding (stdlib ``wave`` +
-   numpy) are implemented for real: these are simple public formats and
-   need no third-party libs.
-3. **Deterministic stub** — unrecognized payloads get fake features
+1. **Header parsing and real decoding** — PNG IHDR, JPEG SOFn, GIF, BMP
+   dimension extraction, PNG pixel decoding and RIFF/WAVE PCM decoding
+   (stdlib ``wave`` + numpy) are implemented for real: these are simple
+   public formats and need no third-party libs.
+2. **Deterministic stub** — unrecognized payloads get fake features
    derived from the bytes (clearly marked), keeping the Arrow contract
    exercised end-to-end.
 
-Pixel-statistics (mean_luma) genuinely require a full decoder, so without
-PIL they fall back to the stub even when dimensions were sniffed.
+Pixel statistics (mean_luma) need a full decoder for every container, so
+they come from the stub even when dimensions were sniffed.
 
 Scale notes: binary payloads ride the shuffle only when explicitly
 repartitioned; feature extraction is map-only (mapInPandas), so the 100 TB
@@ -34,16 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # optional real image decoder
-    from PIL import Image as _PIL_Image  # type: ignore
-except Exception:  # pragma: no cover - PIL absent in this container
-    _PIL_Image = None
-
-try:  # optional real audio decoder (non-WAV formats)
-    import soundfile as _soundfile  # type: ignore
-except Exception:  # pragma: no cover - soundfile absent in this container
-    _soundfile = None
 
 # typed metadata schema carried alongside every media payload
 MEDIA_META_SCHEMA = T.StructType(
@@ -143,7 +130,7 @@ def _decode_image_stub(payload: bytes) -> tuple[int, int, float]:
     (width, height, mean_luma) derived from the payload bytes — keeps the
     pipeline shape (Arrow batch in, typed features out) fully real.  Real
     decoding happens in :func:`_decode_image` when the payload is a known
-    container or PIL is installed."""
+    container."""
     if payload is None:
         raise NotImplementedError("image decode of NULL payload")
     n = len(payload)
@@ -154,25 +141,15 @@ def _decode_image_stub(payload: bytes) -> tuple[int, int, float]:
 
 
 def _decode_image(payload: bytes) -> tuple[str, int, int, float]:
-    """(format, width, height, mean_luma) — PIL when installed (tier 1),
-    header sniffing for dims with stub luma (tier 2), full stub (tier 3)."""
+    """(format, width, height, mean_luma) — header sniffing for dims with
+    stub luma (tier 1), full stub (tier 2)."""
     if payload is None:
-        # surface the stub tier's intended error, not a PIL/len TypeError
+        # surface the stub tier's intended error, not a len TypeError
         raise NotImplementedError("image decode of NULL payload")
-    if _PIL_Image is not None:
-        try:
-            img = _PIL_Image.open(io.BytesIO(payload))
-            gray = img.convert("L")
-            hist = gray.histogram()
-            npix = max(1, sum(hist))
-            luma = sum(i * c for i, c in enumerate(hist)) / npix / 255.0
-            return (img.format or "unknown").lower(), img.width, img.height, luma
-        except Exception:
-            pass  # not an image PIL recognizes → sniff/stub below
     sniffed = sniff_image_dims(payload)
     if sniffed is not None:
         fmt, w, h = sniffed
-        _, _, luma = _decode_image_stub(payload)  # pixel stats need PIL
+        _, _, luma = _decode_image_stub(payload)  # pixel stats need a decoder
         return fmt, w, h, luma
     w, h, luma = _decode_image_stub(payload)
     return "fake", w, h, luma
@@ -293,8 +270,7 @@ def _decode_audio_stub(payload: bytes) -> tuple[int, float, int]:
     """STUB decoder for unrecognized payloads: the bytes stand in for a
     waveform (centered samples in [-128, 127], 8 kHz nominal rate) —
     (duration_ms, rms, zero_crossings) keep the real feature shapes.  Real
-    decoding happens in :func:`_decode_audio` for PCM WAV (stdlib) or via
-    soundfile when installed."""
+    decoding happens in :func:`_decode_audio` for PCM WAV (stdlib)."""
     if payload is None:
         raise NotImplementedError("audio decode of NULL payload")
     samples = [b - 128 for b in payload]
@@ -322,21 +298,13 @@ def _wave_features(samples, framerate: int, nframes: int) -> tuple[int, float, i
 
 def _decode_audio(payload: bytes) -> tuple[int, float, int]:
     """(duration_ms, rms, zero_crossings) — REAL decode for PCM WAV via the
-    stdlib ``wave`` module + numpy (tier 2, no third-party deps); soundfile
-    for other containers when installed (tier 1); deterministic stub
-    otherwise (tier 3)."""
+    stdlib ``wave`` module + numpy (tier 1, no third-party deps);
+    deterministic stub otherwise (tier 2)."""
     import numpy as np
 
     if payload is None:
         # surface the stub tier's intended error, not a slicing TypeError
         raise NotImplementedError("audio decode of NULL payload")
-    if _soundfile is not None:
-        try:
-            data, sr = _soundfile.read(io.BytesIO(payload))
-            mono = data if data.ndim == 1 else data.mean(axis=1)
-            return _wave_features(mono, sr, len(mono))
-        except Exception:
-            pass
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         import wave
 
@@ -455,21 +423,14 @@ def decode_png_pixels(payload: bytes):
 
 
 def _gray_32(payload: bytes):
-    """32×32 float grayscale for hashing: PIL (tier 1) → dep-free PNG
-    decode (tier 2) → deterministic byte-derived stub (tier 3).  Resize is
-    area-mean over nearest-index blocks — deterministic, numpy-only."""
+    """32×32 float grayscale for hashing: dep-free PNG decode (tier 1) →
+    deterministic byte-derived stub (tier 2).  Resize is area-mean over
+    nearest-index blocks — deterministic, numpy-only."""
     import numpy as np
 
-    arr = None
-    if _PIL_Image is not None:
-        try:
-            img = _PIL_Image.open(io.BytesIO(payload)).convert("L").resize((32, 32))
-            return np.asarray(img, dtype=np.float64)
-        except Exception:
-            pass
     arr = decode_png_pixels(payload)
     if arr is None:
-        # tier-3 stub: tile the payload bytes to 1024 cells, then mix each
+        # tier-2 stub: tile the payload bytes to 1024 cells, then mix each
         # cell with its POSITION (splitmix64 finalizer).  Raw tiling made a
         # short payload's matrix rank-deficient (every row identical when
         # len % 32 divides), collapsing the DCT spectrum to a handful of
@@ -635,7 +596,7 @@ def phash_near_duplicates(
 
 def _wav_samples(payload: bytes):
     """(mono float64 samples, framerate) for PCM WAV payloads, else None —
-    the sample-level twin of :func:`_decode_audio`'s tier 2."""
+    the sample-level twin of :func:`_decode_audio`'s tier 1."""
     import numpy as np
 
     if payload is None or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":

@@ -1,7 +1,10 @@
 """Tier-vs-tier sf1 clustering certificate (VERDICT r9 item #4).
 
-``duplicate_clusters`` has two exact tiers — driver union-find under
-``max_driver_edges`` and distributed min-label propagation above it.  The
+``duplicate_clusters`` has two exact algorithms — union-find (one grouped
+task when a driver-side row bound fits ``max_driver_edges``, else on the
+driver over the counted or the star-contracted edges) and distributed
+min-label propagation (``max_driver_edges=0``).  The persisted pair table
+below has a bound, so the union-find side runs in one task.  The
 sf1 exact-value oracle gate excludes ``dup_clusters``/``semdedup`` because
 DuckDB's recursive transitive closure is impractical at ~1M edges, which
 left the distributed tier as the one operator family with no exact

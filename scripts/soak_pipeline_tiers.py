@@ -6,10 +6,10 @@ These three contract keys are sf1-excluded from the oracle battery
 because their DuckDB oracles embed the recursive-CTE transitive closure
 over ~866k sf1 candidate pairs (impractical).  `dup_clusters` already
 holds the tier-vs-tier certificate for the clustering PRIMITIVE
-(`scripts/soak_cluster_tiers.py`: driver union-find ≡ distributed
-min-label on the same sf1 pair table).  This script extends that
-evidence to the composed pipelines END-TO-END: each pipeline is run
-TWICE with `duplicate_clusters` forced to each tier (everything else —
+(`scripts/soak_cluster_tiers.py`: union-find ≡ distributed min-label on
+the same sf1 pair table).  This script extends that evidence to the
+composed pipelines END-TO-END: each pipeline is run TWICE with the
+clustering step forced to each algorithm (everything else —
 signatures, LSH, quality keeper windows, split hashing — identical and
 deterministic), and the FINAL decisions are compared as exact multisets
 (`exceptAll` both ways):
@@ -23,10 +23,12 @@ deterministic), and the FINAL decisions are compared as exact multisets
   the invariant the operator exists for (no cluster straddles the
   split), which is re-asserted on both tiers.
 
-The tier is forced by patching `duplicate_clusters` at its defining
-module (`dask_groupby_spark.operators.dedup`) — every pipeline resolves
-it from there at call time, so the REAL pipeline code runs unmodified;
-nothing is re-implemented here that could drift from the library.
+The algorithm is forced by patching `_clusters`, the body behind
+`duplicate_clusters` that `near_deduplicate` also calls, at its defining
+module (`dask_groupby_spark.operators.dedup`): its `max_driver_edges`
+argument is overridden.  Every pipeline resolves it from there at call
+time, so the REAL pipeline code runs unmodified; nothing is
+re-implemented here that could drift from the library.
 
 Usage: python scripts/soak_pipeline_tiers.py [sf_dir] [pipeline ...]
 (default /tmp/sf1, all three pipelines).  Prints one JSON line per
@@ -56,9 +58,10 @@ from dask_groupby_spark.operators.similarity import semantic_deduplicate
 from dask_groupby_spark.session import get_spark
 from dask_groupby_spark.sources import load_table
 
-_ORIG = dd.duplicate_clusters
+_ORIG = dd._clusters
 
-# far above any sf1 pair count -> always the driver union-find tier
+# far above any sf1 pair count -> always a union-find (one task on a
+# bounded edge list, else the driver)
 DRIVER_TIER = 2_000_000_000
 # 0 is falsy in the tier guard -> always the distributed min-label tier
 DISTRIBUTED_TIER = 0
@@ -66,9 +69,8 @@ DISTRIBUTED_TIER = 0
 
 def _forced(max_driver_edges):
     @functools.wraps(_ORIG)
-    def run(*args, **kwargs):
-        kwargs["max_driver_edges"] = max_driver_edges
-        return _ORIG(*args, **kwargs)
+    def run(pairs, id_a, id_b, max_iter, _mde, edge_bound):
+        return _ORIG(pairs, id_a, id_b, max_iter, max_driver_edges, edge_bound)
 
     return run
 
@@ -81,7 +83,7 @@ def _certify(spark, name, build, check=None):
         ("driver", DRIVER_TIER),
         ("distributed", DISTRIBUTED_TIER),
     ):
-        dd.duplicate_clusters = _forced(tier)
+        dd._clusters = _forced(tier)
         try:
             t0 = time.time()
             res = build().persist()
@@ -91,7 +93,7 @@ def _certify(spark, name, build, check=None):
             if check is not None:
                 check(res)
         finally:
-            dd.duplicate_clusters = _ORIG
+            dd._clusters = _ORIG
     a, b = frames["driver"], frames["distributed"]
     out["mismatches"] = a.exceptAll(b).count() + b.exceptAll(a).count()
     print(json.dumps(out), flush=True)

@@ -271,24 +271,37 @@ class TestLeakageSafeSplit:
         assert splits == {"train", "test"}
 
     def test_driver_uf_equals_distributed_labels(self, spark):
-        """The r7 thresholded driver union-find must return EXACTLY the
-        distributed min-label result — same vertices, same cluster ids —
-        on a graph with chains (diameter > 2), multiple components, and
-        reversed-order edges."""
+        """Every clustering tier returns EXACTLY the distributed min-label
+        result — same vertices, same cluster ids — on a graph with chains
+        (diameter > 2), multiple components, and reversed-order edges: the
+        one-task union-find (a list-built frame has a driver-side row
+        bound), edge count + driver union-find (the same edges through an
+        explode, which has no bound), and the min-label loop.  The
+        unbounded input leaves no persisted RDD behind: its result is
+        collected, not pinned."""
         from dask_groupby_spark.operators.dedup import duplicate_clusters
+        from dask_groupby_spark.plans import _metadata_row_bound
 
         edges = [(5, 4), (4, 3), (3, 2), (2, 1), (9, 8), (20, 25), (25, 21)]
         pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-        uf = {
-            (r["id"], r["cluster_id"])
-            for r in duplicate_clusters(pairs).collect()
-        }
-        dist = {
-            (r["id"], r["cluster_id"])
-            for r in duplicate_clusters(pairs, max_driver_edges=None).collect()
-        }
-        assert uf == dist
-        assert uf == {
+        exploded = pairs.select(
+            F.explode(F.array(F.struct("id_a", "id_b"))).alias("e")
+        ).select("e.*")
+        assert _metadata_row_bound(exploded) is None
+
+        def labels(df, **kw):
+            return {
+                (r["id"], r["cluster_id"])
+                for r in duplicate_clusters(df, **kw).collect()
+            }
+
+        dist = labels(pairs, max_driver_edges=None)
+        assert labels(pairs) == dist
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keys())
+        assert labels(exploded) == dist
+        assert not set(jsc.getPersistentRDDs().keys()) - before
+        assert dist == {
             (1, 1), (2, 1), (3, 1), (4, 1), (5, 1),
             (8, 8), (9, 8),
             (20, 20), (21, 20), (25, 20),

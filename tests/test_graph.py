@@ -113,12 +113,14 @@ def test_connected_components_general_api(spark):
 
 
 def test_connected_components_contraction_tiers_vs_union_find(spark):
-    """r13: duplicate_clusters' distributed path runs a star-contraction
-    pass before any label-propagation round.  All three tiers —
-    driver-direct, contraction+driver union-find (edge count above the
-    driver bound, contracted below it), and contraction+min-label loop
-    (driver tier disabled) — must produce the exact min-label components
-    of a reference union-find, for int AND string ids."""
+    """duplicate_clusters runs a star-contraction pass before any
+    label-propagation round when neither a row bound nor an edge count
+    fits ``max_driver_edges``.  Its tiers — the one-task union-find (the
+    list-built frame's row bound fits the default), contraction + driver
+    union-find (row bound and edge count above ``max_driver_edges=4``,
+    contracted count below it), and contraction + min-label loop
+    (``max_driver_edges=None``) — must produce the exact min-label
+    components of a reference union-find, for int AND string ids."""
     import random
 
     from dask_groupby_spark.operators.dedup import duplicate_clusters

@@ -800,6 +800,12 @@ def test_reduction_job_counts(spark):
         df.unpersist()
 
 
+def _persisted_rdd_ids(spark) -> set:
+    # ids, not a count: the context cleaner may unpersist RDDs that
+    # earlier tests left behind while a call runs
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def test_grid_calls_leave_no_persisted_rdd(spark):
     """A call leaves nothing persisted behind: the dense grid reads its
     aggregate once, so nothing is pinned or cached for the caller to
@@ -820,11 +826,53 @@ def test_grid_calls_leave_no_persisted_rdd(spark):
         "mixed_expected": lambda: groupby_agg(
             df, "k", "j", funcs=[("nansum", "v", "s")], expected_groups=([0, 3, 9], None)),
     }
-    jsc = spark.sparkContext._jsc
     for name, call in calls.items():
-        before = jsc.getPersistentRDDs().size()
+        before = _persisted_rdd_ids(spark)
         call().toPandas()
-        assert jsc.getPersistentRDDs().size() == before, name
+        assert not _persisted_rdd_ids(spark) - before, name
+
+
+def test_bounded_clustering_is_lazy_in_one_task(spark):
+    """An edge list with a driver-side row bound clusters in one grouped
+    union-find task: building ``near_deduplicate`` over a cached corpus, or
+    ``duplicate_clusters`` over a pandas-built pair frame, runs no Spark
+    job, and running either leaves nothing persisted."""
+    import re
+
+    import pandas as pd
+
+    from dask_groupby_spark.operators.dedup import duplicate_clusters, near_deduplicate
+
+    # 16 hex words per text; ids 30..119 repeat the text of id % 30
+    docs = spark.range(120).selectExpr(
+        "id AS doc_id",
+        "regexp_replace(sha2(CAST(id % 30 AS STRING), 256), '(.{4})', '$1 ') AS text",
+    ).cache()
+    docs.count()
+    pairs = spark.createDataFrame(pd.DataFrame({"id_a": [1, 2, 8], "id_b": [2, 3, 9]}))
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("lazy_clusters_build", "lazy_clusters_build")
+        try:
+            outs = {
+                "near_deduplicate": near_deduplicate(docs),
+                "duplicate_clusters": duplicate_clusters(pairs),
+            }
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup("lazy_clusters_build")) == []
+        got = {}
+        for name, out in outs.items():
+            plan = physical_plan(out)
+            assert len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", plan, re.M)) == 1, plan
+            before = _persisted_rdd_ids(spark)
+            got[name] = sorted(tuple(r) for r in out.collect())
+            assert not _persisted_rdd_ids(spark) - before, name
+        assert [r[0] for r in got["near_deduplicate"]] == list(range(30))
+        assert got["duplicate_clusters"] == [(1, 1), (2, 1), (3, 1), (8, 8), (9, 8)]
+    finally:
+        docs.unpersist()
 
 
 def test_two_key_grid_plan_one_scan_two_exchanges(li):
