@@ -130,15 +130,8 @@ def quantile_bins(
     global tier is already scalable and ignores ``method``.
     ``method="auto"`` (DEFAULT): ``groupby_rank``'s own tier decision
     picks two_pass when some group exceeds ``rows_per_chunk`` rows.
-
-    The grouped form lazily PERSISTS the |groups|-row edge table and
-    exposes it as ``res.qcut_edges`` — repeated identical calls reuse
-    the computed edges (CacheManager dedupes by plan); call
-    ``res.qcut_edges.unpersist()`` to release, reading the attribute
-    BEFORE transforming the result (it does not propagate).  r13 adds
-    ``res.qcut_counts`` — the persisted |groups|-row count table (it
-    feeds two consumers in the edge pipeline; unpinned, each one
-    re-aggregated the base table) — release it the same way.
+    Nothing is persisted: each frame in the edge pipeline has one
+    consumer.
     """
     if q < 2:
         raise ValueError(f"q must be >= 2, got {q}")
@@ -172,27 +165,14 @@ def quantile_bins(
     by_list = [by] if isinstance(by, str) else list(by)
     vals = df.select(*by_list, v.alias("__v")).filter(F.col("__v").isNotNull())
     # group sizes from a plain map-combined count — NOT max(__r) over the
-    # ranked frame: ranked has several consumers below and Spark/AQE never
-    # reuses an Exchange across consumers, so every reader re-runs the
-    # per-group sort (r9 plan audit)
-    #
-    # ...and the count table itself is PERSISTED (r13): it feeds two
-    # consumers (`needed` and `spec_m`), and each one
-    # re-aggregated the base table — the r12 grid-rescan disease; the edge
-    # pipeline's plan carried 3 extra base scans (4 total, plan-audited;
-    # sf1 edges-only slice 15.3 s vs 5.9 s for the rank pass it contains).
-    # persist, NOT localCheckpoint, deliberately: a checkpoint injects a
-    # fresh LogicalRDD per call, defeating CacheManager's canonicalized-
-    # plan dedup and with it the documented `qcut_edges` warm-call reuse.
-    # The |groups|-row entry dedupes across calls the same way `qcut_edges`
-    # does and is exposed as ``res.qcut_counts`` (same handle convention).
-    n_tbl = vals.groupBy(*by_list).agg(F.count(F.lit(1)).alias("__n")).persist()
+    # ranked frame, which would read the per-group sort a second time
+    n_tbl = vals.groupBy(*by_list).agg(F.count(F.lit(1)).alias("__n"))
     # per-group row numbers in value order: method "first" gives
     # row_number semantics, and peers order by the value itself
     # (idx_col=__v: tie order within equal values is arbitrary, but the
     # VALUE at any rank — all the edge math needs — is order-invariant,
     # so both rank tiers give identical bins)
-    from .core import groupby_rank
+    from .core import groupby_rank, nullsafe_join
 
     ranked = groupby_rank(
         vals,
@@ -236,43 +216,12 @@ def quantile_bins(
         F.least(F.col("__k") + 2, F.col("__n")).alias("__rhi"),
         (F.col("__pk") - F.col("__k").cast("double")).alias("__d"),
     )
-    # anchor/edge joins are NULL-SAFE on the group columns: a NULL group
-    # is a group (GROUP BY semantics), and plain equi-joins would strand
-    # its rows at NULL bins while its ranks and spec rows exist
-    def _nullsafe(left, right, extra: tuple[str, str] | None = None):
-        rj = right.select(
-            *[F.col(c).alias(f"__qb_by_{i}") for i, c in enumerate(by_list)],
-            *[c for c in right.columns if c not in by_list],
-        )
-        cond = None
-        for i, c in enumerate(by_list):
-            e = F.col(c).eqNullSafe(F.col(f"__qb_by_{i}"))
-            cond = e if cond is None else cond & e
-        if extra is not None:
-            cond = cond & (F.col(extra[0]) == F.col(extra[1]))
-        return left.join(rj, on=cond).drop(
-            *[f"__qb_by_{i}" for i in range(len(by_list))]
-        )
-
-    # ONE pass over the ranked frame: semi-join it down to the ≤ 2(q−1)
-    # anchor ranks per group (broadcast — the spec table is |groups|·(q−1)
-    # rows).  The spec is MELTED to one (role, rank) row per needed edge
-    # endpoint, so the anchor table has exactly ONE consumer (a single
-    # equi-join, lo/hi pivoted back per (group, i)) — no persist, no
-    # cache to leak, and the expensive per-group rank pass appears once
-    # in the lineage (r9 advice follow-up: the earlier shape joined the
-    # anchors twice and parked a persist behind a dynamic
-    # ``.qcut_anchors`` handle that chained transformations dropped).
-    needed = (
-        spec.select(*by_list, F.col("__rlo").alias("__ar"))
-        .unionByName(spec.select(*by_list, F.col("__rhi").alias("__ar")))
-        .distinct()
-    )
-    anchors = _nullsafe(
-        ranked.select(*by_list, "__r", "__v"),
-        F.broadcast(needed),
-        ("__r", "__ar"),
-    ).select(*by_list, "__r", "__v")
+    # ONE join reads the ranked frame: each spec row is MELTED to one
+    # (role, rank) row per edge endpoint and broadcast (|groups|·2(q−1)
+    # rows); `__r` is a row number, so each endpoint meets exactly one
+    # ranked row, and lo/hi pivot back per (group, i).  The join is
+    # NULL-SAFE on the group columns: a NULL group is a group (GROUP BY
+    # semantics), and a plain equi-join would strand its rows at NULL bins.
     spec_m = spec.select(
         *by_list,
         "__i",
@@ -292,10 +241,15 @@ def quantile_bins(
         "__i",
         "__d",
         F.col("__rr.role").alias("__role"),
-        F.col("__rr.ar").alias("__ar"),
+        F.col("__rr.ar").alias("__r"),
     )
     edges = (
-        _nullsafe(spec_m, anchors, ("__ar", "__r"))
+        nullsafe_join(
+            ranked.select(*by_list, "__r", "__v"),
+            spec_m,
+            by_list + ["__r"],
+            broadcast=True,
+        )
         .groupBy(*by_list, "__i")
         .agg(
             F.max(F.when(F.col("__role") == "lo", F.col("__v"))).alias("__lo"),
@@ -316,34 +270,13 @@ def quantile_bins(
     edge_arr = edges.groupBy(*by_list).agg(
         F.array_sort(F.collect_list(F.struct("__i", "__edge"))).alias("__es")
     ).select(*by_list, F.transform("__es", lambda s: s["__edge"]).alias("__edges"))
-    # persist the |groups|-row edge table (KB-class): it is the apex of
-    # the whole rank/anchor pipeline, and Spark's CacheManager dedupes by
-    # canonicalized plan — repeated identical quantile_bins calls (the
-    # dashboard/bench pattern) then reuse the computed edges instead of
-    # re-running the per-group rank pass.  Handle: ``res.qcut_edges``
-    # (documented; read it BEFORE transforming the result — the attribute
-    # does not propagate through transformations).
-    edge_arr = edge_arr.persist()
-    earr = edge_arr.select(
-        *[F.col(c).alias(f"__qb_by_{i}") for i, c in enumerate(by_list)],
-        "__edges",
-    )
-    jcond = None
-    for i, c in enumerate(by_list):
-        e = F.col(c).eqNullSafe(F.col(f"__qb_by_{i}"))
-        jcond = e if jcond is None else jcond & e
-    j = df.join(F.broadcast(earr), on=jcond, how="left").drop(
-        *[f"__qb_by_{i}" for i in range(len(by_list))]
-    )
+    j = nullsafe_join(df, edge_arr, by_list, how="left", broadcast=True)
     b = F.aggregate(
         F.coalesce(F.col("__edges"), F.array().cast("array<double>")),
         F.lit(0),
         lambda acc, e: acc + F.when(v > e, 1).otherwise(0),
     )
-    res = j.withColumn(
+    return j.withColumn(
         out,
         F.when(v.isNotNull() & F.col("__edges").isNotNull(), b).cast("int"),
     ).drop("__edges")
-    res.qcut_edges = edge_arr  # documented persist handle (resample precedent)
-    res.qcut_counts = n_tbl  # r13: the persisted |groups|-row count table
-    return res

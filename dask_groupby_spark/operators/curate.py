@@ -263,7 +263,9 @@ def decontaminate_bloom(
     explode-k-probe-rows → join → regroup paid an Exchange over k× the
     shingle rows just to AND the probe bits back together); then ONE
     narrow shuffle — the per-doc overlap count over matching shingles
-    only.  The corpus text never shuffles.
+    only.  The corpus text never shuffles.  The k lookups broadcast the
+    same filter subtree, so it is built once (the other k−1 read a
+    ``ReusedExchange``); nothing is persisted.
 
     Bloom false positives can only OVER-drop (a clean doc removed), never
     leak contamination; at the default m=2²², k=5 the FP rate at 1e5
@@ -276,13 +278,7 @@ def decontaminate_bloom(
         _shingle_rows(benchmark, bench_text_col, bench_text_col, k)
         .select("sh").distinct()
     )
-    # persisted: the k per-probe broadcast builds below would otherwise
-    # each re-run the blocklist scan + filter shuffle (AQE does not reuse
-    # exchanges across broadcast builds); the table itself is ≤ m/64 rows.
-    # Release via the returned frame's bloom_filter_table.unpersist().
-    bloom = bloom_build(
-        bench_sh, "sh", m_bits=m_bits, n_hashes=n_hashes, hasher=hasher
-    ).persist()
+    bloom = bloom_build(bench_sh, "sh", m_bits=m_bits, n_hashes=n_hashes, hasher=hasher)
 
     corpus_sh = _shingle_rows(df, id_col, text_col, k)
     # k successive broadcast lookups, AND-ed map-side — rows stay one per
@@ -320,14 +316,11 @@ def decontaminate_bloom(
         .withColumnRenamed("id", id_col)
     )
     if mark_only:
-        res = df.join(hits, on=id_col, how="left").withColumn(
+        return df.join(hits, on=id_col, how="left").withColumn(
             "n_contaminated_ngrams",
             F.coalesce(F.col("n_contaminated_ngrams"), F.lit(0)),
         )
-    else:
-        res = df.join(hits.select(id_col), on=id_col, how="left_anti")
-    res.bloom_filter_table = bloom  # unpersist handle
-    return res
+    return df.join(hits.select(id_col), on=id_col, how="left_anti")
 
 
 def mixture_sample(

@@ -204,11 +204,9 @@ def retention(
 
     Plan shape (all stages key on the entity or on tiny aggregates —
     nothing rides a low-cardinality partition): distinct
-    ``(entity, period)`` activity, map-side combined and PERSISTED (it
-    feeds both the cohort aggregate and the join, and AQE never reuses an
-    Exchange across consumers — the repo-wide rule; the unpersist handle
-    is exposed as ``.retention_activity`` on the result); per-entity
-    cohort = ``min(period)``; activity ⋈ cohort on the entity key; one
+    ``(entity, period)`` activity, map-side combined; per-entity cohort =
+    ``min(period)`` as a window over the entity (at most one row per
+    period, so the activity is read once and nothing is persisted); one
     ``groupBy(cohort, offset)`` count — the result is
     ``|cohorts|·horizon`` rows, and the cohort-size denominator comes
     from a window over THAT tiny table (offset 0 is the cohort size by
@@ -238,11 +236,9 @@ def retention(
         df.filter(F.col(entity_col).isNotNull() & ts.isNotNull())
         .select(F.col(entity_col).alias("__e"), p.alias("__p"))
         .distinct()
-        .persist()
     )
-    cohorts = activity.groupBy("__e").agg(F.min("__p").alias("__c"))
     counts = (
-        activity.join(cohorts, on="__e")
+        activity.select("__p", F.min("__p").over(Window.partitionBy("__e")).alias("__c"))
         .select("__c", (F.col("__p") - F.col("__c")).cast("int").alias("__o"))
         .filter(F.col("__o") <= horizon)
         .groupBy("__c", "__o")
@@ -251,14 +247,12 @@ def retention(
     size = F.max(F.when(F.col("__o") == 0, F.col("n_active"))).over(
         Window.partitionBy("__c")
     )
-    out = counts.select(
+    return counts.select(
         F.col("__c").alias("cohort"),
         F.col("__o").alias("offset"),
         "n_active",
         (F.col("n_active") / size).cast("double").alias("retention"),
     )
-    out.retention_activity = activity
-    return out
 
 
 def funnel_timing(

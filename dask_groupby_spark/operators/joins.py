@@ -432,7 +432,6 @@ def bloom_semi_join(
     num_bits: int = 1 << 23,
     num_hashes: int = 3,
     exact: bool = True,
-    cache_bits: bool = True,
 ) -> DataFrame:
     """EXACT semi join of ``big`` against ``small``'s keys, with a Bloom
     prefilter cutting the big side map-side first.  Use when ``small``'s
@@ -445,26 +444,15 @@ def bloom_semi_join(
     prefiltered superset (acceptable when downstream tolerates the fpp,
     e.g. candidate generation).
 
-    ``cache_bits=True`` persists the bitmap so the key-side scan and
-    aggregation run once instead of once per hash (each broadcast
-    exchange re-evaluates its input).  The persisted bitmap is exposed
-    on the returned DataFrame as ``.bloom_bits`` — after the result has
-    been consumed, call ``result.bloom_bits.unpersist()`` to release the
-    MB-sized cache entry instead of waiting for Spark's LRU.  A
-    long-running app calling this in a loop should instead build ONE
-    :func:`bloom_bits_table`, manage its persistence, and call
-    :func:`bloom_prefilter` directly.
+    The ``num_hashes`` probe joins broadcast the same bitmap subtree, so
+    the bitmap is built once and the other probes read a
+    ``ReusedExchange``; nothing is persisted.
     """
     bits = bloom_bits_table(small, on, num_bits, num_hashes)
-    if cache_bits:
-        bits = bits.persist()
     cand = bloom_prefilter(big, bits, on, num_bits, num_hashes)
-    out = cand if not exact else cand.join(
-        small.select(F.col(on)).distinct(), on=on, how="leftsemi"
-    )
-    if cache_bits:
-        out.bloom_bits = bits
-    return out
+    if not exact:
+        return cand
+    return cand.join(small.select(F.col(on)).distinct(), on=on, how="leftsemi")
 
 
 def interval_overlap_join(

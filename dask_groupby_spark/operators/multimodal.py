@@ -185,40 +185,6 @@ def extract_image_features(media: DataFrame, batch_hint: int | None = None) -> D
     return media.mapInPandas(feats, schema=IMAGE_FEATURES_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: payload → transformed payload at (width, height).
-    STUB kernel (no PIL in this container): emits a deterministic truncated
-    payload; a real kernel replaces only the body of ``resize_one``.
-    Map-only — binary payloads never shuffle."""
-
-    def resize_one(payload: bytes) -> bytes:
-        # STUB: real impl = PIL Image.open(...).resize((width, height))
-        return payload[: max(1, (width * height) % 4096)]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": pdf["payload"].map(resize_one),
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -21,6 +21,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core import nullsafe_join
+
 __all__ = [
     "calibration_bins",
     "grouped_auc",
@@ -304,12 +306,7 @@ def grouped_ttest(
     # null-SAFE key equality: a NULL-key group present in both snapshots
     # must survive the join (plain `on=keys` equality would drop it,
     # inconsistently with grouped_bivariate/grouped_ks on the same data)
-    a, b = _side(ref, "ref").alias("__a"), _side(cur, "cur").alias("__b")
-    cond = None
-    for k in keys:
-        eq = a[k].eqNullSafe(b[k])
-        cond = eq if cond is None else cond & eq
-    j = a.join(b, cond, "inner").drop(*[b[k] for k in keys])
+    j = nullsafe_join(_side(ref, "ref"), _side(cur, "cur"), keys)
     se_ref = F.try_divide(F.col("var_ref"), F.col("n_ref"))
     se_cur = F.try_divide(F.col("var_cur"), F.col("n_cur"))
     se2 = se_ref + se_cur
@@ -462,13 +459,7 @@ def grouped_mad(
         F.percentile(c, F.lit(0.5)).alias("median"),
     )
     # null-SAFE key equality so a NULL-key group keeps its median row
-    vals = df.select(*keys, c.alias("__v")).alias("__v_side")
-    m = med.alias("__m_side")
-    cond = None
-    for k in keys:
-        eq = vals[k].eqNullSafe(m[k])
-        cond = eq if cond is None else cond & eq
-    dev = vals.join(m, cond).drop(*[m[k] for k in keys])
+    dev = nullsafe_join(df.select(*keys, c.alias("__v")), med, keys)
     return dev.groupBy(*keys).agg(
         F.first("n").alias("n"),
         F.first("median").alias("median"),
@@ -787,12 +778,7 @@ def flag_outliers(
     stats = grouped_mad(df, keys, col).select(
         *keys, F.col("median").alias("__med"), F.col("mad").alias("__mad")
     )
-    a, b = df.alias("__data"), stats.alias("__stats")
-    cond = None
-    for kk in keys:
-        eq = a[kk].eqNullSafe(b[kk])
-        cond = eq if cond is None else cond & eq
-    j = a.join(b, cond, "left").drop(*[b[kk] for kk in keys])
+    j = nullsafe_join(df, stats, keys, how="left")
     c = _clean(col)
     m = F.lit(0.6745) * (c - F.col("__med")) / F.col("__mad")
     flag = (

@@ -836,8 +836,7 @@ def bm25_scores(
             F.coalesce("__bm25", F.lit(0.0)).alias("bm25"),
         )
     )
-    # unpersist handle (same contract as bloom_semi_join.bloom_bits):
-    # after consuming the result, result.bm25_doc_lengths.unpersist()
+    # unpersist handle: after consuming the result, result.bm25_doc_lengths.unpersist()
     # releases the cached (id, dl) table instead of waiting for LRU
     out_df.bm25_doc_lengths = dl
     return out_df

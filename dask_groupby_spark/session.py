@@ -79,7 +79,17 @@ def get_spark(
         # maxPartitionBytes governs scan granularity instead
         .config("spark.sql.files.maxPartitionBytes", "128MB")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # Python workers import library functions used as pandas UDFs by
+    # module name, so put the package's parent directory first on their
+    # PYTHONPATH: a script then works from any directory, not only from
+    # one whose working directory holds the package.
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    prior = conf.get("spark.executorEnv.PYTHONPATH")
+    conf["spark.executorEnv.PYTHONPATH"] = (
+        pkg_parent + os.pathsep + prior if prior else pkg_parent
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -365,16 +365,12 @@ def upsert_table(
     missing = set(ks) - set(target.columns)
     if missing:
         raise ValueError(f"key columns {sorted(missing)} not in target table")
+    from ..core import nullsafe_join
+
     # null-SAFE key match: an updates row keyed NULL must REPLACE the
     # target's NULL-key row, not append next to it (plain `on=ks` anti
     # join keeps the target row because NULL = NULL is not TRUE)
-    upd_keys = updates.select(*ks).distinct().alias("__u")
-    tgt = target.alias("__t")
-    cond = None
-    for k in ks:
-        eq = tgt[k].eqNullSafe(upd_keys[k])
-        cond = eq if cond is None else cond & eq
-    kept = tgt.join(upd_keys, cond, "left_anti")
+    kept = nullsafe_join(target, updates.select(*ks).distinct(), ks, how="left_anti")
     merged = kept.unionByName(updates.select(*target.columns))
 
     tmp = path.rstrip("/") + "__upsert_tmp"

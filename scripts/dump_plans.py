@@ -204,6 +204,31 @@ def build_queries(spark):
             idx_col="l_orderkey",
         )
 
+    def qcut_grouped():
+        """Per-group deciles (the ``qcut_grouped`` contract shape): the
+        ranked frame is read by one join against the broadcast spec."""
+        from dask_groupby_spark import quantile_bins
+
+        return quantile_bins(li, "l_extendedprice", q=10, by="l_returnflag")
+
+    def bloom_join():
+        """Bloom-prefiltered exact semi join (the ``bloom_join`` contract
+        shape): one bitmap broadcast, reused by every probe."""
+        from dask_groupby_spark.operators import bloom_semi_join
+
+        orders = load_table(spark, SF_DIR, "orders").where(
+            F.col("o_totalprice") > 150000
+        ).select(F.col("o_orderkey").alias("l_orderkey"))
+        return bloom_semi_join(li, orders, "l_orderkey", num_bits=1 << 18)
+
+    def retention():
+        """Weekly cohort retention (the ``retention`` contract shape): the
+        cohort is a window over the distinct activity, read once."""
+        from dask_groupby_spark.operators import retention
+
+        ev = load_table(spark, SF_DIR, "events")
+        return retention(ev, entity_col="user_id", ts_col="ts", period="week")
+
     return {
         "dedup_minhash": dedup_minhash,
         "near_dedup": near_dedup,
@@ -222,6 +247,9 @@ def build_queries(spark):
         "resample_dense_keys": resample_dense_keys,
         "scan_two_pass": scan_two_pass,
         "scan_auto_window": scan_auto_window,
+        "qcut_grouped": qcut_grouped,
+        "bloom_join": bloom_join,
+        "retention": retention,
     }
 
 

@@ -274,22 +274,24 @@ class TestBloomSemiJoin:
         # the probe key never shuffles
         assert "hashpartitioning(k" not in plan, plan
 
-    def test_cached_bits_expose_unpersist_handle(self, spark):
-        """cache_bits=True persists the bitmap with no way to release it
-        (ADVICE r6 #4) — the result must carry the persisted DataFrame as
-        .bloom_bits so callers can unpersist after consuming."""
+    def test_probes_reuse_one_bitmap_broadcast(self, spark):
+        """Nothing is persisted: the num_hashes probe joins broadcast the
+        same bitmap subtree, so the executed plan builds it through one
+        BroadcastExchange and the other probes read a ReusedExchange."""
+        import re
+
         from dask_groupby_spark.operators.joins import bloom_semi_join
 
         big = spark.range(1000).selectExpr("id AS k")
         small = spark.range(0, 1000, 50).selectExpr("id AS k")
-        out = bloom_semi_join(big, small, "k", num_bits=1 << 10)
-        assert out.bloom_bits.storageLevel.useMemory
-        out.count()
-        out.bloom_bits.unpersist(blocking=True)
-        assert not out.bloom_bits.storageLevel.useMemory
-        # cache_bits=False leaves nothing persisted and no handle
-        out2 = bloom_semi_join(big, small, "k", num_bits=1 << 10, cache_bits=False)
-        assert not hasattr(out2, "bloom_bits")
+        num_hashes = 3
+        out = bloom_semi_join(big, small, "k", num_bits=1 << 10, num_hashes=num_hashes)
+        assert len(out.collect()) == 20
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        # a reused exchange does not print its subtree: one bitmap build
+        assert final.count("functions=[bit_or(") == 1, plan
+        assert len(re.findall(r"ReusedExchange \[__w\d", final)) == num_hashes - 1, plan
 
     def test_null_keys_dropped(self, spark):
         from dask_groupby_spark.operators.joins import bloom_semi_join

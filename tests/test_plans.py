@@ -613,23 +613,6 @@ def test_linreg_fit_single_job_partial_agg(spark):
     assert count_exchanges(stats) == 1, plan
 
 
-def test_retention_persists_activity(spark):
-    """retention() must persist the distinct-activity intermediate (it
-    feeds two consumers — AQE never reuses an Exchange across them) and
-    expose the unpersist handle."""
-    from dask_groupby_spark.operators import retention
-    from dask_groupby_spark.sources import load_table
-
-    ev = load_table(spark, SF, "events")
-    out = retention(ev, entity_col="user_id", ts_col="ts", period="week")
-    try:
-        assert out.retention_activity.storageLevel.useMemory
-        plan = physical_plan(out)
-        assert "InMemoryTableScan" in plan, plan
-    finally:
-        out.retention_activity.unpersist()
-
-
 def test_target_encode_broadcast_join_back(spark):
     """target_encode: the category-stats table joins back BROADCAST — the
     fact table is never shuffled on the category key (a hot category is
@@ -806,16 +789,23 @@ def _persisted_rdd_ids(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
-def test_grid_calls_leave_no_persisted_rdd(spark):
+def test_calls_leave_no_persisted_rdd(spark):
     """A call leaves nothing persisted behind: the dense grid reads its
-    aggregate once, so nothing is pinned or cached for the caller to
-    release."""
-    from dask_groupby_spark import groupby_agg, resample, xarray_reduce
+    aggregate once, and the Bloom joins, grouped ``quantile_bins`` and
+    ``retention`` read each shared frame once, so nothing is pinned or
+    cached for the caller to release."""
+    from dask_groupby_spark import groupby_agg, quantile_bins, resample, xarray_reduce
+    from dask_groupby_spark.operators import bloom_semi_join, retention
+    from dask_groupby_spark.operators.curate import decontaminate_bloom
 
     df = spark.range(3000).selectExpr(
         "CAST(id % 7 AS INT) AS k", "CAST(id % 5 AS INT) AS j", "id AS idx",
         "CAST(id % 13 AS DOUBLE) AS v", "timestamp_seconds(id * 1800) AS ts",
     ).where("NOT (k = 3 AND j = 1)")
+    corpus = spark.range(60).selectExpr(
+        "id AS doc_id",
+        "regexp_replace(sha2(CAST(id % 20 AS STRING), 256), '(.{4})', '$1 ') AS text",
+    )
     calls = {
         "two_key": lambda: groupby_reduce(df, "k", "j", func="nanmean", value="v"),
         "xarray_retained_dim": lambda: xarray_reduce(
@@ -825,6 +815,14 @@ def test_grid_calls_leave_no_persisted_rdd(spark):
             df.where("idx < 500 OR idx > 2000"), "ts", "6 hours", "count", "v", "j", dense=True),
         "mixed_expected": lambda: groupby_agg(
             df, "k", "j", funcs=[("nansum", "v", "s")], expected_groups=([0, 3, 9], None)),
+        "bloom_semi_join": lambda: bloom_semi_join(
+            df, df.where("k < 3"), "idx", num_bits=1 << 10),
+        "decontaminate_bloom": lambda: decontaminate_bloom(
+            corpus, corpus.where("doc_id % 7 = 2").select("text"), k=3, mark_only=True),
+        "quantile_bins_window": lambda: quantile_bins(df, "v", q=4, by="k", method="window"),
+        "quantile_bins_two_pass": lambda: quantile_bins(
+            df, "v", q=4, by=["k", "j"], method="two_pass"),
+        "retention": lambda: retention(df, entity_col="j", ts_col="ts", period="day"),
     }
     for name, call in calls.items():
         before = _persisted_rdd_ids(spark)
